@@ -1487,9 +1487,12 @@ object Df {
 
   /** `ReadParquet` (`io/parquet.py:79`): column pruning + DNF filter
     * pushdown happen in Catalyst (FileSourceScan PushedFilters), the
-    * rewrites the reference hand-rolls in `io/parquet.py:162-317`. */
+    * rewrites the reference hand-rolls in `io/parquet.py:162-317`. The
+    * schema comes from one footer read on the driver ([[FooterSchema]]),
+    * so building the frame runs no Spark job, as `ReadParquet._meta`
+    * runs none. */
   def readParquet(spark: SparkSession, path: String, columns: Seq[String] = Nil): Df = {
-    val base = spark.read.parquet(path)
+    val base = FooterSchema.read(spark, path)
     new Df(if (columns.isEmpty) base else base.select(columns.map(base(_)): _*))
   }
   /** `ReadCSV` (`io/csv.py:8`); `usecols` mirrors the reference's

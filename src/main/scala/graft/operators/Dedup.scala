@@ -224,8 +224,11 @@ object Dedup {
                           maxBucket: Int): DataFrame = {
     val kc = keyCols.map(col)
     val sz = index.queryExecution.optimizedPlan.stats.sizeInBytes
-    val thresh = BigInt(index.sparkSession.conf
-      .get("spark.graft.dedup.pairsPrecountBytes", (16L << 20).toString))
+    val key = "spark.graft.dedup.pairsPrecountBytes"
+    val thresh = index.sparkSession.conf.getOption(key)
+      .map(s => scala.util.Try(BigInt(s)).getOrElse(throw
+        new IllegalArgumentException(s"$key must be a byte count, got '$s'")))
+      .getOrElse(BigInt(16L << 20))
     if (sys.env.contains("SPARK_GRAFT_DEBUG_PAIRS"))
       System.err.println(s"[bucketPairs] keys=$keyCols estBytes=$sz thresh=$thresh")
     val statsKnown = sz < BigInt(Long.MaxValue) / 2

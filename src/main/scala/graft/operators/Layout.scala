@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.api.Df
+import graft.api.{Df, FooterSchema}
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
@@ -187,7 +187,7 @@ object Layout {
                      targetRecordsPerFile: Long): Df = {
     require(targetRecordsPerFile >= 1,
       s"compactParquet: targetRecordsPerFile must be >= 1: $targetRecordsPerFile")
-    val src = spark.read.parquet(srcDir)
+    val src = FooterSchema.read(spark, srcDir)
     val n = src.count()
     val files = math.max(1L,
       (n + targetRecordsPerFile - 1) / targetRecordsPerFile)
@@ -199,6 +199,6 @@ object Layout {
     src.repartition(files.toInt).write.mode("overwrite")
       .option("maxRecordsPerFile", targetRecordsPerFile)
       .parquet(dstDir)
-    new Df(spark.read.parquet(dstDir))
+    new Df(FooterSchema.read(spark, dstDir))
   }
 }

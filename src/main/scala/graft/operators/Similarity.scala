@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.api.Df
+import graft.api.{Df, FooterSchema}
 import graft.functions.VectorFunctions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -243,7 +243,7 @@ object Similarity {
           org.apache.spark.sql.types.DoubleType))))
       .sdf.coalesce(1)
       .write.mode("overwrite").parquet(s"$path/centroids")
-    new Df(spark.read.parquet(s"$path/index").groupBy("cell")
+    new Df(FooterSchema.read(spark, s"$path/index").groupBy("cell")
       .agg(count(lit(1)).as("n")))
   }
 
@@ -281,7 +281,7 @@ object Similarity {
     require(nprobe >= 1, s"searchIvfIndex: nprobe must be >= 1: $nprobe")
     val spark = queries.spark
     graft.plans.GraftFunctions.register(spark)
-    val centers = spark.read.parquet(s"$path/centroids")
+    val centers = FooterSchema.read(spark, s"$path/centroids")
       .collect().map(r => (r.getInt(0), r.getInt(1), r.getDouble(2)))
       .groupBy(_._1).toSeq.sortBy(_._1)
       .map { case (_, rows) => rows.sortBy(_._2).map(_._3).toArray }.toArray
@@ -304,7 +304,7 @@ object Similarity {
       .withColumn("cell",
         explode(transform(nearest, s => s.getField("cell"))))
       .where(col("cell") >= 0) // no-op; marks the side DPP-selective
-    val c = spark.read.parquet(s"$path/index")
+    val c = FooterSchema.read(spark, s"$path/index")
     val joined = rerankTopK(c.join(broadcast(q), Seq("cell")), k, excludeSelf)
     // cell pruning is this operator's I/O CONTRACT (read nprobe/nlist
     // of the index), not an optimization hint — verify the DPP
@@ -323,7 +323,7 @@ object Similarity {
     else {
       val qq = q.persist()
       val probed = qq.select("cell").distinct().collect().map(_.getInt(0))
-      val cf = spark.read.parquet(s"$path/index")
+      val cf = FooterSchema.read(spark, s"$path/index")
         .where(col("cell").isin(probed.map(Int.box).toIndexedSeq: _*))
       new Df(rerankTopK(cf.join(broadcast(qq), Seq("cell")), k, excludeSelf))
         .retaining(qq)

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.api.Df
+import graft.api.{Df, FooterSchema}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, LongType, TimestampNTZType, TimestampType}
@@ -87,7 +87,7 @@ object QueryUtil {
     * [[assertPlausibleTs]]. */
   def events(s: SparkSession, dir: String): Df = {
     val path = s"$dir/events.parquet"
-    val raw = s.read.parquet(path)
+    val raw = FooterSchema.read(s, path)
     val adapted = raw.withColumn("ts", adaptTs(raw.schema("ts").dataType, "ts"))
     assertPlausibleTs(adapted, "ts", path)
     new Df(adapted)

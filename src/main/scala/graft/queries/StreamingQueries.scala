@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.api.FooterSchema
 import graft.streaming.StreamOps
 import org.apache.spark.sql.functions._
 import QueryUtil._
@@ -58,6 +59,13 @@ object StreamingQueries {
       d.toString
     })
 
+  /** `src` [[stage]]d as `copies` arriving waves, opened as a stream
+    * with `src`'s own schema, one staged file per trigger */
+  private def stagedStream(s: org.apache.spark.sql.SparkSession, src: String,
+                           copies: Int): org.apache.spark.sql.DataFrame =
+    s.readStream.schema(FooterSchema.read(s, src).schema)
+      .option("maxFilesPerTrigger", "1").parquet(stage(src, copies))
+
   /** [[stage]] + `waves` PUNCTUATION waves: one sentinel row each at
     * max(ts)+1h, +2h, … (event_id/user_id = −1, the timer-drain
     * convention [[graft.streaming.StreamOps.streamingSessionizeWithTimers]]
@@ -79,7 +87,7 @@ object StreamingQueries {
       val real = d.resolve("arrival_01.parquet")
       Files.copy(Paths.get(src), real)
       real.toFile.deleteOnExit()
-      val raw = s.read.parquet(src)
+      val raw = FooterSchema.read(s, src)
       for ((hours, i) <- (1 to waves).map(w => w -> (w + 1))) {
         val side = Files.createTempDirectory("graft_stream_sent")
         raw.orderBy(col("ts").desc).limit(1)
@@ -146,8 +154,7 @@ object StreamingQueries {
     // dependent (not oracle-able); the fingerprint set is exact ----
     "q129_stream_dedup" -> ((s, dir) => {
       val src = s"$dir/documents.parquet"
-      val st = s.readStream.schema(s.read.parquet(src).schema)
-        .option("maxFilesPerTrigger", "1").parquet(stage(src, 2))
+      val st = stagedStream(s, src, 2)
       StreamOps.runToCompletion(
         StreamOps.streamingExactDedup(st, "text"), "q129_sink", mode = "append")
         .select(graft.functions.TextFunctions.fingerprint(col("text")).as("fp"))
@@ -162,8 +169,7 @@ object StreamingQueries {
     // the 2 h watermark and the result equals global distinct ----
     "q134_stream_dedup_bounded" -> ((s, dir) => {
       val src = s"$dir/documents.parquet"
-      val st = s.readStream.schema(s.read.parquet(src).schema)
-        .option("maxFilesPerTrigger", "1").parquet(stage(src, 2))
+      val st = stagedStream(s, src, 2)
         .withColumn("ts", timestamp_seconds(lit(1700000000L) + col("doc_id")))
       StreamOps.runToCompletion(
         StreamOps.streamingDedupWithinWatermark(st, "text", "ts", "2 hours"),
@@ -181,8 +187,7 @@ object StreamingQueries {
     // instead of replaying the canonicalizer ----
     "q138_stream_url_dedup" -> ((s, dir) => {
       val src = s"$dir/documents.parquet"
-      val st = s.readStream.schema(s.read.parquet(src).schema)
-        .option("maxFilesPerTrigger", "1").parquet(stage(src, 2))
+      val st = stagedStream(s, src, 2)
         .withColumn("ts", timestamp_seconds(lit(1700000000L) + col("doc_id")))
         .selectExpr("doc_id", "ts",
           """CASE WHEN doc_id % 50 = 0 THEN CAST(NULL AS STRING)
@@ -206,8 +211,7 @@ object StreamingQueries {
     // counts ----
     "q148_stream_enrich" -> ((s, dir) => {
       val src = s"$dir/documents.parquet"
-      val st = s.readStream.schema(s.read.parquet(src).schema)
-        .option("maxFilesPerTrigger", "1").parquet(stage(src, 2))
+      val st = stagedStream(s, src, 2)
         .selectExpr("doc_id",
           "concat('site', CAST(doc_id % 5 AS STRING), '.example.com') AS domain")
       val dim = s.range(0, 4).selectExpr(
@@ -250,8 +254,7 @@ object StreamingQueries {
     // replay, verbatim ----
     "q179_stream_gopher" -> ((s, dir) => {
       val src = s"$dir/documents.parquet"
-      val st = s.readStream.schema(s.read.parquet(src).schema)
-        .option("maxFilesPerTrigger", "1").parquet(stage(src, 1))
+      val st = stagedStream(s, src, 1)
         .selectExpr("doc_id", s"${CurationQueries.gopherAug} AS text")
       StreamOps.runToCompletion(
         graft.operators.Quality.gopherQualityStats(
@@ -267,8 +270,7 @@ object StreamingQueries {
     // table proves the landing-zone write path ----
     "q185_stream_sink" -> ((s, dir) => {
       val src = s"$dir/documents.parquet"
-      val st = s.readStream.schema(s.read.parquet(src).schema)
-        .option("maxFilesPerTrigger", "1").parquet(stage(src, 1))
+      val st = stagedStream(s, src, 1)
         .select("doc_id", "lang", "n_chars")
       val out = java.nio.file.Files.createTempDirectory("graft_sinkq")
       out.toFile.deleteOnExit()

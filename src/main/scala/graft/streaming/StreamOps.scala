@@ -17,7 +17,9 @@ import org.apache.spark.sql.types._
 object StreamOps {
 
   /** Open the events directory as an unbounded stream. The schema is
-    * DERIVED from a batch read of the same path — never hardcoded: a
+    * DERIVED from a batch read of the same path (its footer, read on the
+    * driver by [[graft.api.FooterSchema]], so opening the stream runs no
+    * job once the probe below has run for the path) — never hardcoded: a
     * hardcoded `ts: LongType` once read a TIMESTAMP(MICROS) column as
     * micros-as-long, the ÷1000 nanos conversion collapsed every event to
     * ~1970, and the windowed queries emitted confidently wrong rows with
@@ -28,7 +30,7 @@ object StreamOps {
     * instead of corrupting state downstream. */
   def readEventsStream(spark: SparkSession, dir: String): DataFrame = {
     import graft.queries.QueryUtil
-    val batch = spark.read.parquet(dir)
+    val batch = graft.api.FooterSchema.read(spark, dir)
     val tsType = batch.schema("ts").dataType
     QueryUtil.assertPlausibleTs(
       batch.withColumn("ts", QueryUtil.adaptTs(tsType, "ts")), "ts", dir)

@@ -163,6 +163,21 @@ class ErrorContractSpec extends AnyFunSuite {
     } finally spark.conf.unset("graft.keylessWindowMaxRows")
   }
 
+  test("malformed spark.graft.dedup.pairsPrecountBytes names the config, not a bare NumberFormatException") {
+    val docs = Df.fromRows(spark, Seq(Row(1L, "a b c"), Row(2L, "a b c")),
+      StructType(Seq(StructField("doc_id", LongType), StructField("text", StringType))))
+    val key = "spark.graft.dedup.pairsPrecountBytes"
+    spark.conf.set(key, "16MiB")
+    try {
+      // NumberFormatException IS an IllegalArgumentException: the raw
+      // parse error must not pass for the named one
+      val e = intercept[IllegalArgumentException](
+        graft.operators.Dedup.minhashPairs(docs, "text", "doc_id"))
+      assert(!e.isInstanceOf[NumberFormatException], e.toString)
+      assert(e.getMessage.contains(key) && e.getMessage.contains("16MiB"), e.getMessage)
+    } finally spark.conf.unset(key)
+  }
+
   test("keyless withRank trips a named ceiling; diff/ffill/pctChange route scalably past it") {
     // the keyless default is pandas-parity (DIVERGENCES #10). withRank
     // still rides one window task, so past graft.keylessWindowMaxRows

@@ -456,8 +456,10 @@ class PlanSpec extends AnyFunSuite {
       val li = Df.readParquet(spark, s"$sf/lineitem.parquet").sdf
       val narrow = li.select(col("l_orderkey"))
       val wide = li.groupBy("l_returnflag").count()
-      Thread.sleep(300) // drain the read-side footer job events
-      jobs = 0
+      // the read takes its schema from a footer on the driver: building
+      // the frames above ran no job either
+      org.apache.spark.GraftListenerBusSync.waitUntilEmpty(spark.sparkContext)
+      assert(jobs == 0, s"the parquet read ran $jobs schema-inference job(s)")
       // narrow one-row-group scan → round-robin fan to session width
       val fanned = FanOut(narrow)
       assert(fanned.queryExecution.executedPlan.toString
@@ -479,7 +481,7 @@ class PlanSpec extends AnyFunSuite {
       // streaming frame → untouched (the old probe threw outright)
       val stream = spark.readStream.format("rate").load()
       assert(FanOut(stream) eq stream)
-      Thread.sleep(500) // listener bus is async
+      org.apache.spark.GraftListenerBusSync.waitUntilEmpty(spark.sparkContext)
       assert(jobs == 0, s"FanOut ran $jobs eager job(s) while planning")
     } finally spark.sparkContext.removeSparkListener(listener)
   }

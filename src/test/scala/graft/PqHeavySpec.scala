@@ -194,7 +194,7 @@ class PqHeavySpec extends AnyFunSuite {
     // count ONLY jobs tagged with this test's job group — late-arriving
     // job events from earlier suites/queries on the shared session (the
     // listener bus is async) can otherwise inflate the count and flake
-    // the ≤3 assertion on a loaded host. SQL execution propagates the
+    // the ≤1 assertion on a loaded host. SQL execution propagates the
     // calling thread's local properties (incl. the group id) to its
     // worker threads, so every job the search call triggers is counted.
     val group = "pq-heavy-ivf-planning"
@@ -223,16 +223,17 @@ class PqHeavySpec extends AnyFunSuite {
         org.apache.spark.GraftListenerBusSync.waitUntilEmpty(
           spark.sparkContext)
         // at least one grouped job must be SEEN — if job-group
-        // propagation to the SQL worker threads ever breaks, the <=3
+        // propagation to the SQL worker threads ever breaks, the <=1
         // bound would otherwise pass vacuously and mask an
         // eager-evaluation regression instead of flagging it
         assert(jobs >= 1,
           "no grouped jobs observed — job-group propagation lost")
-        // 3 = codebook schema read + codebook collect + index partition
-        // discovery, all metadata-sized. The pre-r15 probe-list
+        // 1 = the codebook collect (nlist×dim rows); the centroid and
+        // index reads take their schemas from footers on the driver
+        // (FooterSchema) and run no job. The pre-r15 probe-list
         // round-trip added a persist + distinct + collect over the
         // query-side plan on top (≥ 5 jobs, data-sized).
-        assert(jobs <= 3, s"search planning ran $jobs jobs — the query-side plan is being evaluated eagerly")
+        assert(jobs <= 1, s"search planning ran $jobs jobs — the query-side plan is being evaluated eagerly")
         r
       } finally spark.sparkContext.removeSparkListener(listener)
     // probed cells reach the scan as a DYNAMIC partition-pruning
