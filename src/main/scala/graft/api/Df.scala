@@ -967,7 +967,7 @@ final class Df(val sdf: DataFrame, val indexCol: Option[String] = None) {
     // broadcast threshold the planner broadcasts it and nothing
     // shuffles, so there is no reduce skew for the salt to break and
     // the ×salt replication only multiplies the broadcast build (r22
-    // ProfileQ, q91: the 8×-exploded build dominated the query as
+    // stage profile, q91: the 8×-exploded build dominated the query as
     // driver/broadcast time, guide §2.2/§3.1). The salt only ever
     // changes partitioning, never rows (the operator's documented
     // contract), so the gate is row-identical on both sides: plain join

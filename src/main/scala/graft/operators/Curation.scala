@@ -783,7 +783,7 @@ object Curation {
     val v = col(valueCol)
     // both passes (decimal-moment stats + the zscore projection) are
     // CPU-heavy per row and otherwise run at the file scan's partition
-    // count (r22 ProfileQ, q180: both stages on 3 tasks, ~0.7 s each) —
+    // count (r22 stage profile, q180: both stages on 3 tasks, ~0.7 s each) —
     // FanOut redistributes only when a purely-narrow scan is materially
     // below the session's parallelism, a planning no-op at real scale
     // (guide §2.5); the two consumers share the fanned exchange via AQE

@@ -36,6 +36,8 @@ import org.apache.spark.sql.functions._
   */
 object Dedup {
 
+  private val log = org.apache.logging.log4j.LogManager.getLogger(getClass)
+
   /** Shared call-time validation (the ivfTopK `fitSample` convention):
     * every knob fails HERE with its name, not deep inside an executor
     * with an opaque expression error. */
@@ -229,8 +231,7 @@ object Dedup {
       .map(s => scala.util.Try(BigInt(s)).getOrElse(throw
         new IllegalArgumentException(s"$key must be a byte count, got '$s'")))
       .getOrElse(BigInt(16L << 20))
-    if (sys.env.contains("SPARK_GRAFT_DEBUG_PAIRS"))
-      System.err.println(s"[bucketPairs] keys=$keyCols estBytes=$sz thresh=$thresh")
+    log.debug(s"bucketPairs: keys=$keyCols estBytes=$sz thresh=$thresh")
     val statsKnown = sz < BigInt(Long.MaxValue) / 2
     val keep = if (statsKnown && sz < thresh) {
       val w = org.apache.spark.sql.expressions.Window.partitionBy(kc: _*)

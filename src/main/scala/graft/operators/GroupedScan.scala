@@ -237,10 +237,12 @@ object GroupedScan {
         case Some(v) => v == "1"
         case None =>
           val sz = df.queryExecution.optimizedPlan.stats.sizeInBytes
-          sz < BigInt(Long.MaxValue) / 2 &&
-            sz >= BigInt(df.sparkSession.conf
-              .get("spark.graft.scan.persistAutoBytes", (3L << 29).toString)
-              .toLong)
+          val key = "spark.graft.scan.persistAutoBytes"
+          val thresh = df.sparkSession.conf.getOption(key)
+            .map(s => scala.util.Try(BigInt(s)).getOrElse(throw
+              new IllegalArgumentException(s"$key must be a byte count, got '$s'")))
+            .getOrElse(BigInt(3L << 29))
+          sz < BigInt(Long.MaxValue) / 2 && sz >= thresh
       })
     val rdd = {
       if (persistOn) {

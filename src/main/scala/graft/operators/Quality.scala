@@ -136,7 +136,7 @@ object Quality {
     // FanOut before the persist (r22): the cached table inherits the
     // scan's partitioning, so on a one-row-group corpus file EVERY
     // consumer pass (gram explode + argmax, window hashing, posexplode)
-    // ran single-task over the cache (ProfileQ q145: two ~0.9 s 1-task
+    // ran single-task over the cache (r22 stage profile, q145: two ~0.9 s 1-task
     // stages while 32 cores idled); a planning no-op once the scan has
     // real row-group parallelism (guide §2.5).
     val tokTab = Materialize.barrier(FanOut(docs.sdf)

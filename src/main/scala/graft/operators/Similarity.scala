@@ -97,75 +97,143 @@ object Similarity {
         size(vec).cast("string"))))
   }
 
+  /** The coarse quantizer's training points: the usable vectors
+    * ([[fullyFinite]]) of a `fitSample` fraction of `c`
+    * (`corpus_id`, `c_vec`), capped at 256·nlist rows — FAISS's
+    * `max_points_per_centroid` default: k-means on more points than that
+    * does not improve a coarse quantizer. The cap keeps the rows with the smallest `xxhash64(corpus_id)` —
+    * a hash order, so it favours no partition — and the vector's own
+    * hash breaks id ties, so the collected order (and with it the fit)
+    * is deterministic. Plans as one TakeOrderedAndProject: one job. */
+  private[graft] def ivfFitPoints(c: org.apache.spark.sql.DataFrame,
+                                  nlist: Int, fitSample: Double,
+                                  who: String): Array[Array[Double]] = {
+    require(fitSample > 0.0 && fitSample <= 1.0,
+      s"$who: fitSample must be a fraction in (0, 1]: $fitSample")
+    val pts = (if (fitSample >= 1.0) c else c.sample(fitSample, 42L))
+      .select(col("corpus_id"), transform(col("c_vec"), _.cast("double")).as("v"))
+      .where(fullyFinite(col("v")))
+      .orderBy(xxhash64(col("corpus_id")), xxhash64(col("v")))
+      .limit(256 * nlist)
+      .collect().map(_.getSeq[Double](1).toArray)
+    // name the knob when the fit input is empty (tiny fitSample × small
+    // corpus, or all-NULL vectors) instead of failing on an empty fit
+    if (pts.isEmpty) throw new IllegalArgumentException(
+      s"$who: the quantizer fit input is empty - fitSample=$fitSample " +
+        "sampled no rows with non-NULL, fully-finite vectors; raise " +
+        "fitSample or check the vector column")
+    val dims = pts.map(_.length).distinct
+    require(dims.length == 1,
+      s"$who: fit vectors differ in length (${dims.sorted.mkString(", ")})")
+    pts
+  }
+
+  /** The IVF coarse quantizer, fitted on the driver over
+    * [[ivfFitPoints]]: k-means++ seeding (`java.util.Random(42)`), then
+    * Lloyd iterations until every centre moves ≤ 1e-4 or 10 iterations
+    * pass (MLlib KMeans' defaults; its k-means‖ init approximates
+    * k-means++). Assignment takes the first minimum (lowest centre) and
+    * an emptied cluster keeps its centre. When the points hold fewer
+    * than `nlist` distinct vectors, seeding stops early and fewer
+    * centres come back, as MLlib's do. Deterministic: same points, same
+    * order, same seed. */
+  private[graft] def fitCentroids(c: org.apache.spark.sql.DataFrame,
+                                  nlist: Int, fitSample: Double,
+                                  who: String): Array[Array[Double]] = {
+    require(nlist >= 1, s"$who: nlist must be >= 1: $nlist")
+    val pts = ivfFitPoints(c, nlist, fitSample, who)
+    def dist2(a: Array[Double], b: Array[Double]): Double = {
+      var s = 0.0; var i = 0
+      while (i < a.length) { val d = a(i) - b(i); s += d * d; i += 1 }
+      s
+    }
+    val rng = new java.util.Random(42L)
+    val seeds = scala.collection.mutable.ArrayBuffer(pts(rng.nextInt(pts.length)))
+    val d2 = pts.map(dist2(_, seeds.head))
+    while (seeds.length < nlist && d2.sum > 0.0) {
+      // next seed with probability ∝ D²: the first point whose running
+      // weight reaches a uniform draw over the total
+      val r = rng.nextDouble() * d2.sum
+      val run = d2.scanLeft(0.0)(_ + _).tail
+      val pick = d2.indices.find(i => run(i) >= r && d2(i) > 0.0)
+        .getOrElse(d2.lastIndexWhere(_ > 0.0))
+      seeds += pts(pick)
+      for (i <- pts.indices) d2(i) = math.min(d2(i), dist2(pts(i), pts(pick)))
+    }
+    var centers = seeds.toArray
+    var moved = true
+    var iter = 0
+    while (moved && iter < 10) {
+      val groups = pts.groupBy(p => centers.indices.minBy(j => dist2(p, centers(j))))
+      val next = centers.indices.map(j => groups.get(j).fold(centers(j)) { g =>
+        g.transpose.map(_.sum / g.length)
+      }).toArray
+      moved = centers.indices.exists(j => dist2(centers(j), next(j)) > 1e-4 * 1e-4)
+      centers = next
+      iter += 1
+    }
+    centers
+  }
+
+  /** Every centre as a (d, cell) struct of `v`'s squared distance to
+    * it, ascending — ties break toward the lower cell, matching Lloyd's
+    * first-minimum argmin — handed to `pick` (a slice or the first
+    * cell). Each distance is one zip_with + aggregate over an array
+    * LITERAL of that centre's components (the constant-tree trick of
+    * [[lshSignature]]), so the plan stays codegen'd expressions. Same
+    * undefined-input contract as lshSignature: a NULL vector OR one
+    * with a NULL element → NULL (the row drops out of the cell
+    * equi-join / probe explode); a GENUINE dim mismatch vs the centres
+    * fails loudly, naming `who` — an unguarded NULL distance would
+    * otherwise sort to cell 0 (struct ordering treats the NULL field as
+    * smallest) and silently pair undefined rows with real queries. */
+  private def rankCells(v: org.apache.spark.sql.Column,
+                        centers: Array[Array[Double]], who: String)(
+      pick: org.apache.spark.sql.Column => org.apache.spark.sql.Column)
+      : org.apache.spark.sql.Column = {
+    val dim = centers.head.length
+    def dist2(ctr: Array[Double]) =
+      aggregate(zip_with(v, lit(ctr), (x, w) => (x.cast("double") - w) * (x.cast("double") - w)),
+        lit(0.0), (acc, t) => acc + t)
+    when(v.isNull || exists(v, _.isNull), lit(null))
+      .when(size(v) === dim,
+        pick(array_sort(array(centers.zipWithIndex.toIndexedSeq.map { case (ctr, i) =>
+          struct(dist2(ctr).as("d"), lit(i).as("cell"))
+        }: _*))))
+      .otherwise(raise_error(concat(
+        lit(s"$who: expected dim=$dim, got vector of length "),
+        size(v).cast("string"))))
+  }
+
   /** IVF (inverted-file) ANN: a coarse k-means quantizer partitions the
     * corpus into `nlist` cells; each query probes its `nprobe` nearest
     * cells and reranks exactly (graft_cosine) inside them.
     *
-    * The scale path beyond LSH: the quantizer is one MLlib KMeans fit
-    * (distributed Lloyd iterations) over a `fitSample` FRACTION of the
-    * corpus — at 100 TB nobody fits on the full data; the sample only
-    * shapes the centroids, assignment below is still exact for every
-    * row. Everything after the fit is pure codegen'd expressions, no
-    * row-at-a-time UDFs: each centroid distance is one zip_with +
-    * aggregate over an array LITERAL of that centroid's components (the
-    * same constant-tree trick as [[lshSignature]]), and nearest-cell /
-    * nprobe-cell selection is an array_sort over (distance, cell)
-    * structs — ties break toward the lower cell id, matching Lloyd's
-    * first-minimum argmin. Search touches nprobe/nlist of the data; with
-    * nprobe = nlist the result provably equals brute force (spec-tested).
+    * The scale path beyond LSH. The quantizer is fitted on the driver
+    * ([[fitCentroids]]) from ONE collect of a `fitSample` FRACTION of
+    * the corpus, capped at 256·nlist rows — at 100 TB nobody fits on
+    * the full data; the sample only shapes the centroids, assignment
+    * below is still exact for every row. Driver cost: the sample holds
+    * 256·nlist·dim doubles (16 MiB at nlist = 16, dim = 512) and each
+    * of ≤ 10 Lloyd rounds is 256·nlist²·dim multiply-adds, so nlist
+    * stays in the hundreds, not the 10⁵ of a billion-row FAISS index.
+    * Construction runs that one job; everything after the fit is pure
+    * codegen'd expressions ([[rankCells]]), no row-at-a-time UDFs.
+    * Search touches nprobe/nlist of the data; with nprobe = nlist the
+    * result provably equals brute force (spec-tested).
     */
   def ivfTopK(queries: Df, corpus: Df, vecCol: String, idCol: String,
               k: Int, nlist: Int = 16, nprobe: Int = 4,
               excludeSelf: Boolean = true, fitSample: Double = 1.0): Df = {
-    import org.apache.spark.ml.clustering.KMeans
-    import org.apache.spark.ml.functions.array_to_vector
-    require(fitSample > 0.0 && fitSample <= 1.0,
-      s"ivfTopK: fitSample must be a fraction in (0, 1]: $fitSample")
     graft.plans.GraftFunctions.register(queries.spark)
     val c = corpus.sdf.select(col(idCol).as("corpus_id"), col(vecCol).as("c_vec"))
-    // NULL vectors and vectors carrying NULL elements are excluded from
-    // the fit (array_to_vector/MLlib reject them at runtime); they are
-    // dropped from the search below too — same undefined-input contract
-    // as lshSignature
-    val fitInput = (if (fitSample >= 1.0) c else c.sample(fitSample, 42L))
-      .where(col("c_vec").isNotNull && !exists(col("c_vec"), _.isNull))
-      .select(array_to_vector(col("c_vec")).as("features"))
-    // name the knob when the fit input is empty (tiny fitSample × small
-    // corpus, or all-NULL vectors) instead of dying deep in MLlib with
-    // an opaque error. The emptiness probe is an eager Spark job, so it
-    // runs only OFF the happy path: upfront when the caller actually
-    // sampled (the risky case), otherwise lazily on the failure path.
-    def emptyFit = new IllegalArgumentException(
-      s"ivfTopK: the quantizer fit input is empty - fitSample=$fitSample " +
-        "sampled no rows with non-NULL, fully-defined vectors; raise " +
-        "fitSample or check the vector column")
-    if (fitSample < 1.0 && fitInput.isEmpty) throw emptyFit
-    val model =
-      try new KMeans().setK(nlist).setSeed(42L).setMaxIter(10)
-        .setFeaturesCol("features").fit(fitInput)
-      catch { case e: Exception if fitInput.isEmpty => throw emptyFit.initCause(e) }
     // nlist centroids (driver-side, tiny) become expression literals —
     // the plan carries them to every executor, no broadcast variable.
-    val centers = model.clusterCenters.map(_.toArray)
-    val dim = centers.head.length
-    def dist2(v: org.apache.spark.sql.Column, ctr: Array[Double]) =
-      aggregate(zip_with(v, lit(ctr), (x, w) => (x.cast("double") - w) * (x.cast("double") - w)),
-        lit(0.0), (acc, t) => acc + t)
-    // same undefined-input contract as lshSignature: a NULL vector OR a
-    // vector with a NULL element → NULL cells (row drops out of the
-    // cell equi-join / probe explode), a GENUINE dim mismatch vs the
-    // fitted centroids fails loudly — an unguarded NULL distance would
-    // otherwise sort to cell 0 (struct ordering treats the NULL field
-    // as smallest) and silently pair undefined rows with real queries.
+    // NULL vectors and vectors carrying NULL elements drop out of the
+    // fit and, via NULL cells, of the search too
+    val centers = fitCentroids(c, nlist, fitSample, "ivfTopK")
     def nearestCells(v: org.apache.spark.sql.Column, n: Int) =
-      when(v.isNull || exists(v, _.isNull), lit(null))
-        .when(size(v) === dim,
-          slice(array_sort(array(centers.zipWithIndex.toIndexedSeq.map { case (ctr, i) =>
-            struct(dist2(v, ctr).as("d"), lit(i).as("cell"))
-          }: _*)), 1, n))
-        .otherwise(raise_error(concat(
-          lit(s"ivfTopK: expected dim=$dim, got vector of length "),
-          size(v).cast("string"))))
+      rankCells(v, centers, "ivfTopK")(slice(_, 1, n))
     val assigned = c.withColumn("cell",
       nearestCells(col("c_vec"), 1).getItem(0).getField("cell"))
     val q = broadcast(queries.sdf.select(col(idCol).as("query_id"), col(vecCol).as("q_vec"))
@@ -175,10 +243,11 @@ object Similarity {
   }
 
   /** Materialize an IVF index as a PARTITIONED parquet layout: the
-    * corpus is coarse-quantized with the [[ivfTopK]] MLlib k-means fit
-    * and written under `path`/index partitioned by cell, with the
-    * centroids (the only state a searcher needs) in long format under
-    * `path`/centroids. This moves the inverted-file idea to the
+    * corpus is coarse-quantized with the [[ivfTopK]] driver-side
+    * k-means fit (one collect of at most 256·nlist sampled rows, the
+    * same driver cost) and written under `path`/index partitioned by
+    * cell, with the centroids (the only state a searcher needs) in long
+    * format under `path`/centroids. This moves the inverted-file idea to the
     * STORAGE layer: at 100 TB the index is built once, and every probe
     * after that reads only its nprobe cell DIRECTORIES — partition
     * pruning at the scan, so the other nlist−nprobe cells cost zero
@@ -189,38 +258,11 @@ object Similarity {
     * for a skewed layout. */
   def buildIvfIndex(corpus: Df, vecCol: String, idCol: String, path: String,
                     nlist: Int = 16, fitSample: Double = 1.0): Df = {
-    import org.apache.spark.ml.clustering.KMeans
-    import org.apache.spark.ml.functions.array_to_vector
-    require(fitSample > 0.0 && fitSample <= 1.0,
-      s"buildIvfIndex: fitSample must be a fraction in (0, 1]: $fitSample")
     val c = corpus.sdf.select(col(idCol).as("corpus_id"),
       col(vecCol).as("c_vec"))
-    val fitInput = (if (fitSample >= 1.0) c else c.sample(fitSample, 42L))
-      .where(col("c_vec").isNotNull && !exists(col("c_vec"), _.isNull))
-      .select(array_to_vector(col("c_vec")).as("features"))
-    def emptyFit = new IllegalArgumentException(
-      s"buildIvfIndex: the quantizer fit input is empty - fitSample=$fitSample " +
-        "sampled no rows with non-NULL, fully-defined vectors; raise " +
-        "fitSample or check the vector column")
-    if (fitSample < 1.0 && fitInput.isEmpty) throw emptyFit
-    val model =
-      try new KMeans().setK(nlist).setSeed(42L).setMaxIter(10)
-        .setFeaturesCol("features").fit(fitInput)
-      catch { case e: Exception if fitInput.isEmpty => throw emptyFit.initCause(e) }
-    val centers = model.clusterCenters.map(_.toArray)
-    val dim = centers.head.length
-    def dist2(v: org.apache.spark.sql.Column, ctr: Array[Double]) =
-      aggregate(zip_with(v, lit(ctr), (x, w) => (x.cast("double") - w) * (x.cast("double") - w)),
-        lit(0.0), (acc, t) => acc + t)
-    val cellOf =
-      when(col("c_vec").isNull || exists(col("c_vec"), _.isNull), lit(null))
-        .when(size(col("c_vec")) === dim,
-          array_sort(array(centers.zipWithIndex.toIndexedSeq.map { case (ctr, i) =>
-            struct(dist2(col("c_vec"), ctr).as("d"), lit(i).as("cell"))
-          }: _*)).getItem(0).getField("cell"))
-        .otherwise(raise_error(concat(
-          lit(s"buildIvfIndex: expected dim=$dim, got vector of length "),
-          size(col("c_vec")).cast("string"))))
+    val centers = fitCentroids(c, nlist, fitSample, "buildIvfIndex")
+    val cellOf = rankCells(col("c_vec"), centers, "buildIvfIndex")(
+      _.getItem(0).getField("cell"))
     // co-locate each cell before the write: without this every task
     // writes a fragment into every cell directory (tasks × nlist small
     // files); with it each cell's rows land in contiguous files — the
@@ -286,19 +328,8 @@ object Similarity {
       .groupBy(_._1).toSeq.sortBy(_._1)
       .map { case (_, rows) => rows.sortBy(_._2).map(_._3).toArray }.toArray
     require(centers.nonEmpty, s"searchIvfIndex: no centroids under $path")
-    val dim = centers.head.length
-    def dist2(v: org.apache.spark.sql.Column, ctr: Array[Double]) =
-      aggregate(zip_with(v, lit(ctr), (x, w) => (x.cast("double") - w) * (x.cast("double") - w)),
-        lit(0.0), (acc, t) => acc + t)
-    val nearest =
-      when(col("q_vec").isNull || exists(col("q_vec"), _.isNull), lit(null))
-        .when(size(col("q_vec")) === dim,
-          slice(array_sort(array(centers.zipWithIndex.toIndexedSeq.map { case (ctr, i) =>
-            struct(dist2(col("q_vec"), ctr).as("d"), lit(i).as("cell"))
-          }: _*)), 1, math.min(nprobe, centers.length)))
-        .otherwise(raise_error(concat(
-          lit(s"searchIvfIndex: expected dim=$dim, got vector of length "),
-          size(col("q_vec")).cast("string"))))
+    val nearest = rankCells(col("q_vec"), centers, "searchIvfIndex")(
+      slice(_, 1, math.min(nprobe, centers.length)))
     val q = queries.sdf
       .select(col(idCol).as("query_id"), col(vecCol).as("q_vec"))
       .withColumn("cell",

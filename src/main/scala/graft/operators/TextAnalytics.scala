@@ -183,7 +183,7 @@ object TextAnalytics {
       : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
     // FanOut like the sibling shingle/ngram paths (r22): the tokenize
     // explode AND every downstream read of the persisted token table
-    // otherwise run at the raw scan's partition count (ProfileQ q152:
+    // otherwise run at the raw scan's partition count (r22 stage profile, q152:
     // the barrier count and the freq/scored aggregates all single-task
     // on a one-row-group corpus file while 32 cores idled; guide §2.5)
     val toks = Materialize.barrier(

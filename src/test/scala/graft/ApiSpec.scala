@@ -25,6 +25,25 @@ object TestSpark {
   // deterministically with org.apache.spark.GraftListenerBusSync
   // .waitUntilEmpty — do NOT reintroduce sleep-polling (the r17 flake
   // class: quiet-window polls can under-wait on a loaded host).
+
+  /** jobs started while `body` runs, after the listener bus drains;
+    * `counted` selects jobs by their first stage's name (the call site) */
+  def jobsDuring[T](body: => T, counted: String => Boolean = _ => true): (T, Int) = {
+    val sc = spark.sparkContext
+    org.apache.spark.GraftListenerBusSync.waitUntilEmpty(sc)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (counted(j.stageInfos.sortBy(_.stageId).headOption.fold("")(_.name)))
+          jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try {
+      val r = body
+      org.apache.spark.GraftListenerBusSync.waitUntilEmpty(sc)
+      (r, jobs.get)
+    } finally sc.removeSparkListener(listener)
+  }
 }
 
 /** Differential tests for the wrapper surface itself — the reference's

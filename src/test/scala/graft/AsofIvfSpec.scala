@@ -124,14 +124,13 @@ class AsofIvfSpec extends AnyFunSuite {
       Similarity.ivfTopK(q, e, "embedding", "vec_id", 3, fitSample = 1.5))
     assert(badHi.getMessage.contains("fitSample"))
     // a legal-but-tiny fraction that samples zero rows must name the
-    // problem instead of dying inside MLlib's KMeans
+    // problem instead of failing on an empty fit
     val tiny = e.where(col("vec_id") < 20)
     val empty = intercept[IllegalArgumentException](
       Similarity.ivfTopK(q, tiny, "embedding", "vec_id", 3, fitSample = 1e-9))
     assert(empty.getMessage.contains("empty"))
-    // fitSample = 1.0 skips the upfront probe (no eager job on the
-    // happy path); an all-NULL corpus still gets the named-knob
-    // message via the failure-path catch, not a raw MLlib error
+    // fitSample = 1.0 fits on the whole corpus; an all-NULL corpus
+    // still gets the named-knob message from the empty fit collect
     val allNull = new Df(e.sdf.limit(5)
       .selectExpr("vec_id", "CAST(NULL AS ARRAY<FLOAT>) AS embedding"))
     val nullFit = intercept[IllegalArgumentException](
@@ -147,5 +146,60 @@ class AsofIvfSpec extends AnyFunSuite {
     val perQ = ivf.groupBy(_.getLong(0))
     assert(perQ.values.forall(rs => rs.length <= 3 && rs.map(_.getInt(1)).min == 1))
     assert(ivf.forall(r => math.abs(r.getAs[Double]("cosine")) <= 1.0))
+  }
+
+  private def corpusOf(e: Df) =
+    e.sdf.select(col("vec_id").as("corpus_id"), col("embedding").as("c_vec"))
+
+  test("IVF quantizer fit is one construction job") {
+    val e = Df.readParquet(spark, s"$sf/embeddings.parquet")
+    val q = e.where(col("vec_id") < 3)
+    for (fs <- Seq(0.25, 1.0)) {
+      val (_, jobs) = jobsDuring(Similarity.ivfTopK(q, e, "embedding", "vec_id", 3,
+        nlist = 8, nprobe = 8, fitSample = fs))
+      assert(jobs == 1, s"ivfTopK(fitSample=$fs) built with $jobs jobs")
+    }
+    // buildIvfIndex also writes the index (AQE shuffle-stage jobs, then
+    // the write) and the centroids; the fit is its only collect
+    val path = java.nio.file.Files.createTempDirectory("graft_ivf_fit").toString
+    val (_, fitJobs) = jobsDuring(
+      Similarity.buildIvfIndex(e, "embedding", "vec_id", path, nlist = 8, fitSample = 0.25),
+      _.startsWith("collect at"))
+    assert(fitJobs == 1, s"buildIvfIndex fitted with $fitJobs jobs")
+  }
+
+  test("IVF quantizer fit is deterministic") {
+    val c = corpusOf(Df.readParquet(spark, s"$sf/embeddings.parquet"))
+    val a = Similarity.fitCentroids(c, 8, 0.25, "spec")
+    val b = Similarity.fitCentroids(c, 8, 0.25, "spec")
+    assert(a.length == 8)
+    assert(a.map(_.toSeq).toSeq == b.map(_.toSeq).toSeq)
+  }
+
+  test("IVF quantizer fits on at most 256 rows per cell") {
+    val e = Df.readParquet(spark, s"$sf/embeddings.parquet") // 500 rows
+    assert(e.count() > 256)
+    assert(Similarity.ivfFitPoints(corpusOf(e), 1, 1.0, "spec").length == 256)
+    assert(Similarity.fitCentroids(corpusOf(e), 1, 1.0, "spec").length == 1)
+  }
+
+  test("IVF with fewer distinct vectors than nlist still equals brute force") {
+    val e = Df.readParquet(spark, s"$sf/embeddings.parquet")
+    // three distinct vectors, each shared by a third of the corpus
+    val first = e.where(col("vec_id") < 3).sdf
+      .select(col("vec_id").as("src"), col("embedding").as("v"))
+    val dup = new Df(e.sdf.join(broadcast(first), col("vec_id") % 3 === col("src"))
+      .select(col("vec_id"), col("v").as("embedding")))
+    assert(Similarity.fitCentroids(corpusOf(dup), 8, 1.0, "spec").length == 3)
+    val q = dup.where(col("vec_id") < 5)
+    // ties on cosine break by corpus id, so both rankings are total
+    val brute = Similarity.bruteForceTopK(q, dup, "embedding", "vec_id", 4)
+      .sdf.orderBy("query_id", "rank").collect()
+      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2)))
+    val ivf = Similarity.ivfTopK(q, dup, "embedding", "vec_id", 4,
+      nlist = 8, nprobe = 8)
+      .sdf.orderBy("query_id", "rank").collect()
+      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2)))
+    assert(brute.nonEmpty && brute.toSeq == ivf.toSeq)
   }
 }

@@ -178,6 +178,21 @@ class ErrorContractSpec extends AnyFunSuite {
     } finally spark.conf.unset(key)
   }
 
+  test("malformed spark.graft.scan.persistAutoBytes names the config, not a bare NumberFormatException") {
+    // the key is read only when neither the call nor the environment
+    // chose the GroupedScan persist path
+    assume(!sys.env.contains("SPARK_GRAFT_SCAN_PERSIST"),
+      "env override set - adaptive default not reachable")
+    val key = "spark.graft.scan.persistAutoBytes"
+    spark.conf.set(key, "1.5GiB")
+    try {
+      val e = intercept[IllegalArgumentException](
+        d.scanKeyless(Seq("x"))(_.cumsum("y", "cs")))
+      assert(!e.isInstanceOf[NumberFormatException], e.toString)
+      assert(e.getMessage.contains(key) && e.getMessage.contains("1.5GiB"), e.getMessage)
+    } finally spark.conf.unset(key)
+  }
+
   test("keyless withRank trips a named ceiling; diff/ffill/pctChange route scalably past it") {
     // the keyless default is pandas-parity (DIVERGENCES #10). withRank
     // still rides one window task, so past graft.keylessWindowMaxRows

@@ -39,23 +39,6 @@ class FooterSchemaSpec extends AnyFunSuite {
     finally old.fold(spark.conf.unset(kv._1))(spark.conf.set(kv._1, _))
   }
 
-  /** jobs started while `body` runs, after the listener bus drains */
-  private def jobsDuring[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    org.apache.spark.GraftListenerBusSync.waitUntilEmpty(sc)
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    try {
-      val r = body
-      org.apache.spark.GraftListenerBusSync.waitUntilEmpty(sc)
-      (r, jobs.get)
-    } finally sc.removeSparkListener(listener)
-  }
-
   /** a one-column parquet file whose ts is INT64 TIMESTAMP(NANOS), the
     * encoding that reads as long only under `nanosAsLong` */
   private lazy val nanosFile: String = {

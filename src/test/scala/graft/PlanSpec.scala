@@ -261,7 +261,7 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("ivfTopK plan is expression-only: no row-level UDF, no cross join") {
-    // the quantizer fit is MLlib, but the SEARCH plan must be pure
+    // the quantizer fit is driver-side, but the SEARCH plan must be pure
     // codegen'd expressions — centroid distances as array-literal
     // folds, not a predict()/probe UDF per row (SURVEY §2.11 rule)
     val e = Df.readParquet(spark, s"$sf/embeddings.parquet")
