@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** One-command plan diagnostic (VERDICT r18 item 7): dump the formatted
   * optimized/physical plan of any named `SparkEntry.queries` entry plus
@@ -27,14 +26,7 @@ object Explain {
       sys.exit(1)
     }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = GraftSession.fromEnv()
     spark.sparkContext.setLogLevel("ERROR")
     args.foreach { name =>
       val df = SparkEntry.queries(name)(spark, sfDir)

@@ -1,12 +1,12 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Build an m× scaled replica of a driver testdata directory for
   * BENCH-ONLY runs (the driver ships sf0.001/0.01/0.1; the round-5
-  * `BenchPairs` scale datapoint used the same replicate-with-offset
-  * construction, `BENCHLOG.md`). Correctness is NOT claimed at the
+  * near-dup pair scale datapoint in `BENCHLOG.md` used the same
+  * replicate-with-offset construction). Correctness is NOT claimed at the
   * scaled sf — the DuckDB gate runs at sf0.01.
   *
   * Scaling rules (join-consistent, artifact-free):
@@ -21,7 +21,7 @@ import org.apache.spark.sql.functions._
   *    structure scales LINEARLY (m× the clusters of the source corpus).
   *    Un-prefixed replicas would be near-dups of each other and every
   *    pair query would go quadratic in m — the corpus artifact the
-  *    round-5 BenchPairs run measured deliberately;
+  *    round-5 pair-scaling run (BENCHLOG.md) measured deliberately;
   *  - `embeddings.label` is offset per replica for the same reason:
   *    m× the blocks of the original size, never m²-denser blocks;
   *  - `events.user_id`/`event_id` are offset: m× the users, per-user
@@ -34,15 +34,7 @@ object MakeScaled {
     val Array(srcDir, outDir, mStr) = args
     val m = mStr.toInt
     require(m >= 1, s"scale multiplier must be >= 1: $m")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.fromEnv()
 
     // far above any key at the source sf (sf0.1 max key ~6e5)
     val OFF = 100000000L

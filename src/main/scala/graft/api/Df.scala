@@ -499,12 +499,8 @@ final class Df(val sdf: DataFrame, val indexCol: Option[String] = None) {
   private def keylessCeiling(
       w: org.apache.spark.sql.expressions.WindowSpec,
       value: Column, verb: String): Column = {
-    val cap = sdf.sparkSession.conf
-      .getOption("graft.keylessWindowMaxRows")
-      .map(s => scala.util.Try(s.trim.toLong).getOrElse(throw
-        new IllegalArgumentException(
-          s"graft.keylessWindowMaxRows must be a long row count, got '$s'")))
-      .getOrElse(10000000L)
+    val cap = graft.GraftSession.longConf(sdf.sparkSession,
+      "graft.keylessWindowMaxRows", 10000000L)
     when(row_number().over(w) > cap, raise_error(lit(
       s"$verb: keyless window over more than $cap rows — a " +
         "single-partition sort at scale. Pass partitionBy keys, use " +
@@ -561,9 +557,11 @@ final class Df(val sdf: DataFrame, val indexCol: Option[String] = None) {
     * (DIVERGENCES #1). `persistSorted`: Some(true) caches the sorted
     * partitions so the protocol's second pass skips the shuffle read +
     * re-sort, Some(false) forces the two-pass re-fetch, None (default)
-    * defers to the SPARK_GRAFT_SCAN_PERSIST env var — per-call because
-    * one session can mix page-cache-resident scans with scans whose
-    * shuffle files outrun it (VERDICT r19 item 7). */
+    * lets the adaptive gate decide: ON once the optimizer's size
+    * estimate of the input reaches `spark.graft.scan.persistAutoBytes`
+    * (default 1.5 GiB). Per-call because one session can mix
+    * page-cache-resident scans with scans whose shuffle files outrun it
+    * (VERDICT r19 item 7). */
   def scanKeyless(orderKeys: Seq[String],
                   persistSorted: Option[Boolean] = None)(
       build: Df.KeylessScanBatch => Df.KeylessScanBatch): Df = {
@@ -1432,7 +1430,7 @@ object Df {
     * (a weak referent would be collected first, stranding the cache
     * entry). The flip side — long-lived drivers that release through
     * NEITHER path accumulate plans here — is handled where it bites:
-    * the harness loops (graft.Verify / graft.Bench / graft.BenchPairs)
+    * the harness loops (graft.Verify / graft.Bench)
     * call [[releaseRetained]] right before their per-query
     * `spark.catalog.clearCache()` fallback, so the registry drains once
     * per query; long-lived embedders should do the same. */

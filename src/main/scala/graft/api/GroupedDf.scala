@@ -335,7 +335,9 @@ final class GroupedDf private[api] (
     * protocol's second pass skips the shuffle read + re-sort (one extra
     * cached copy of the input; worthwhile when the shuffle files outrun
     * the page cache), Some(false) forces the two-pass re-fetch, None
-    * (default) defers to the SPARK_GRAFT_SCAN_PERSIST env var. The
+    * (default) lets the adaptive gate decide: ON once the optimizer's
+    * size estimate of the input reaches
+    * `spark.graft.scan.persistAutoBytes` (default 1.5 GiB). The
     * single-verb convenience wrappers (cumsumScalable, …) use the
     * default — batch multi-verb calls are where the choice pays. */
   def scanScalableOrdered(orderKeys: Seq[(String, Boolean)],

@@ -226,11 +226,8 @@ object Dedup {
                           maxBucket: Int): DataFrame = {
     val kc = keyCols.map(col)
     val sz = index.queryExecution.optimizedPlan.stats.sizeInBytes
-    val key = "spark.graft.dedup.pairsPrecountBytes"
-    val thresh = index.sparkSession.conf.getOption(key)
-      .map(s => scala.util.Try(BigInt(s)).getOrElse(throw
-        new IllegalArgumentException(s"$key must be a byte count, got '$s'")))
-      .getOrElse(BigInt(16L << 20))
+    val thresh = graft.GraftSession.longConf(index.sparkSession,
+      "spark.graft.dedup.pairsPrecountBytes", 16L << 20)
     log.debug(s"bucketPairs: keys=$keyCols estBytes=$sz thresh=$thresh")
     val statsKnown = sz < BigInt(Long.MaxValue) / 2
     val keep = if (statsKnown && sz < thresh) {

@@ -28,7 +28,7 @@ import org.apache.spark.sql.types._
   *  3. the driver folds those O(numPartitions) summaries into a
   *     carry-in per partition (an `Array` of one small state per
   *     partition — never data) and broadcasts it. MEASURED ceiling
-  *     (BenchDriverCoord, BENCHLOG r16): the collected driver state is
+  *     (BENCHLOG r16): the collected driver state is
   *     `partitions × (|groupKeys| + Σ per-kernel state)` bytes —
   *     FLAT in data size (identical bytes at sf0.1 and 100× that) and
   *     linear in partitions (a 3-kernel scan: 3.7 KB at P=32, 56 KB at
@@ -197,9 +197,9 @@ object GroupedScan {
     // ONE RDD for both jobs: the range exchange is computed once and
     // reused (job 2's shuffle dependency is satisfied from job 1's
     // shuffle files — only the post-shuffle sort re-executes).
-    // SPARK_GRAFT_SCAN_PERSIST=1 additionally caches the SORTED
-    // partitions (DataFrame-level persist → compressed columnar cached
-    // batches, MEMORY_AND_DISK) so pass 2 skips the shuffle read and
+    // `persistOn` additionally caches the SORTED partitions
+    // (DataFrame-level persist → compressed columnar cached batches,
+    // MEMORY_AND_DISK) so pass 2 skips the shuffle read and
     // the re-sort, at the cost of a second cached copy of the input —
     // blocks drain via Df.releaseRetained like every operator persist.
     // Cached partitions replay pass 1's exact row order; an evicted
@@ -207,15 +207,12 @@ object GroupedScan {
     // (An RDD[Row]-level persist was tried first and ruled out: 50M-row
     // Java-serialized Row blocks trip a BlockManager put AssertionError
     // under memory pressure on 4.1 — BENCHLOG r19.) The InternalRow→Row
-    // conversion is inherently per-pass either way. Default OFF pending
-    // the ScaleProbe A/B (BENCHLOG r19).
-    // Per-call `persistSorted` (VERDICT r19 item 7) overrides the
-    // process-global env var: a caller mixing small and huge scans in
-    // one session chooses per call; the env var stays the default so
-    // the bench A/B knob keeps working unchanged.
-    // ADAPTIVE default (r21): when neither the call nor the env chose,
-    // flip ON once the optimizer's size estimate for the scan input
-    // crosses `spark.graft.scan.persistAutoBytes`. The r20 100M-row A/B
+    // conversion is inherently per-pass either way.
+    // Per-call `persistSorted` (VERDICT r19 item 7) decides when set: a
+    // caller mixing small and huge scans in one session chooses per call.
+    // ADAPTIVE default (r21): when the call did not choose, flip ON once
+    // the optimizer's size estimate for the scan input crosses
+    // `spark.graft.scan.persistAutoBytes`. The r20 100M-row A/B
     // measured the crossover: caching the sorted partitions beats pass
     // 2's shuffle re-fetch + re-sort by ~1.8x at 100M rows (~4.5 GB
     // sorted) and is a wash at 50M (~2.2 GB) — BENCHLOG r20. Default
@@ -228,22 +225,12 @@ object GroupedScan {
     // (~1.0 GB estimate) OFF and engages the measured win band.
     // Stats-less plans (sizeInBytes at the Long.MaxValue fallback) stay
     // OFF: an unknown size must not trigger a corpus-sized cache.
-    val persistOn = persistSorted.getOrElse(
-      sys.env.get("SPARK_GRAFT_SCAN_PERSIST") match {
-        // any SET value other than "1" means OFF — the pre-r21 contract
-        // was .contains("1"), so e.g. "true"/"" must not silently fall
-        // through to the adaptive gate (ADVICE r21); adaptive is for
-        // the UNSET case only
-        case Some(v) => v == "1"
-        case None =>
-          val sz = df.queryExecution.optimizedPlan.stats.sizeInBytes
-          val key = "spark.graft.scan.persistAutoBytes"
-          val thresh = df.sparkSession.conf.getOption(key)
-            .map(s => scala.util.Try(BigInt(s)).getOrElse(throw
-              new IllegalArgumentException(s"$key must be a byte count, got '$s'")))
-            .getOrElse(BigInt(3L << 29))
-          sz < BigInt(Long.MaxValue) / 2 && sz >= thresh
-      })
+    val persistOn = persistSorted.getOrElse {
+      val thresh = graft.GraftSession.longConf(df.sparkSession,
+        "spark.graft.scan.persistAutoBytes", 3L << 29)
+      val sz = df.queryExecution.optimizedPlan.stats.sizeInBytes
+      sz < BigInt(Long.MaxValue) / 2 && sz >= thresh
+    }
     val rdd = {
       if (persistOn) {
         val p = ranged.persist(
@@ -280,8 +267,6 @@ object GroupedScan {
 
     // ---- driver fold: carry-in per partition, O(numPartitions) ----
     val nParts = rdd.getNumPartitions
-    ProtocolFootprint.lastGroupedScan = Some(
-      ProtocolFootprint.footprint(nParts, summaries.length, summaries))
     val carries = new Array[(Array[Any], Array[AnyRef])](nParts)
     var carry: (Array[Any], Array[AnyRef]) = null
     val byPid = summaries.map(s => s.pid -> s).toMap

@@ -120,9 +120,9 @@ object Quantiles {
     * select. The driver state is O(partitions × groups) — guarded by
     * `maxGroups`; for HIGH-cardinality groups use the per-group
     * aggregate, whose buffers are small exactly then (the same duality
-    * as window verbs vs GroupedScan). MEASURED (BenchDriverCoord,
-    * BENCHLOG r16): the collected count maps are ~75 bytes per
-    * (partition, group) entry and FLAT in data size — 2.5 KB for
+    * as window verbs vs GroupedScan). MEASURED (BENCHLOG r16): the
+    * collected count maps are ~75 bytes per (partition, group) entry
+    * and FLAT in data size — 2.5 KB for
     * 7 groups × 32 partitions at sf0.1 AND at 100× that data; 8.8 KB
     * at conf=512 (the sized pin used 150 partitions). Ceiling formula:
     * bytes ≈ 75 × partitions × min(groups, maxGroups) — the default
@@ -217,8 +217,6 @@ object Quantiles {
         }
         Iterator.single(p -> m.toMap)
       }.collect()
-    ProtocolFootprint.lastQuantiles = Some(ProtocolFootprint.footprint(
-      counts.length, counts.iterator.map(_._2.size).sum, counts))
     val totals = scala.collection.mutable.HashMap.empty[Seq[Any], Long]
     counts.foreach { case (_, m) =>
       m.foreach { case (k, n) => totals.update(k, totals.getOrElse(k, 0L) + n) }

@@ -1,8 +1,11 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.analysis.FunctionRegistry.FunctionBuilder
+import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Cast, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
+import org.apache.spark.sql.types.LongType
 
 /** Registration for graft's native Catalyst expressions.
   *
@@ -10,8 +13,9 @@ import org.apache.spark.sql.catalyst.expressions.Expression
   *  - [[GraftFunctions.register]]: idempotent per-session registration
   *    (used internally by the operators — callers need no setup);
   *  - [[GraftExtensions]]: `SparkSessionExtensions` hook for
-  *    `spark.sql.extensions=graft.plans.GraftExtensions`, making
-  *    `graft_cosine` available in every session of a cluster.
+  *    `spark.sql.extensions=graft.plans.GraftExtensions`, making every
+  *    function of [[GraftFunctions.table]] available in every session
+  *    of a cluster.
   *
   * The optional scan-CSE optimizer rule activates separately via
   * [[ScanCSE.install]]: it must sit in the LAST logical batch
@@ -20,41 +24,55 @@ import org.apache.spark.sql.catalyst.expressions.Expression
   * [[ScanCSE]] scaladoc for the batch-ordering argument.
   */
 object GraftFunctions {
-  val names: Seq[String] =
-    Seq("graft_cosine", "graft_jaccard_sorted", "graft_pct_normalize",
-      "graft_jaro_winkler", "graft_bloom_agg", "graft_might_contain",
-      "graft_vector_sum")
+  /** One native function: its SQL name, the class its `ExpressionInfo`
+    * names, and its arity-checked builder. */
+  private[plans] final case class Fn(name: String, infoClass: Class[_],
+                                     builder: FunctionBuilder)
 
-  private[plans] val vectorSumBuilder: Seq[Expression] => Expression = { exprs =>
+  private def fn(name: String, infoClass: Class[_])(
+      mk: String => FunctionBuilder): Fn = Fn(name, infoClass, mk(name))
+
+  /** The function table: [[names]], [[register]] and [[GraftExtensions]]
+    * all iterate over it.
+    *
+    * The Bloom sketch pair (`BloomFilterAggregate` /
+    * `BloomFilterMightContain`) is Spark's own — engine-native,
+    * codegen'd, but with no public DSL wrapper and (in this build) no SQL
+    * registration for the probe side; exposed here for
+    * [[graft.operators.Dedup.bloomDedupNew]]. The aggregate's
+    * estimated-items argument is CAST to LongType so SQL integer literals
+    * type-check; the probe's sketch side must be foldable (a literal) per
+    * the expression's own input check. */
+  private[plans] val table: Seq[Fn] = Seq(
+    fn("graft_cosine", classOf[FloatCosine])(
+      binary(_, "(array<float>, array<float>)", FloatCosine)),
+    fn("graft_jaccard_sorted", classOf[SortedJaccard])(
+      binary(_, "(array<bigint>, array<bigint>)", SortedJaccard)),
+    fn("graft_pct_normalize", classOf[PercentNormalize])(
+      unary(_, "(string)", PercentNormalize)),
+    fn("graft_jaro_winkler", classOf[JaroWinkler])(
+      binary(_, "(string, string)", JaroWinkler)),
+    fn("graft_bloom_agg", classOf[BloomFilterAggregate])(
+      binary(_, "(bigint hash, bigint estimated_items)",
+        (child, est) => new BloomFilterAggregate(child, Cast(est, LongType)))),
+    fn("graft_might_contain", classOf[BloomFilterMightContain])(
+      binary(_, "(binary sketch, bigint hash)", BloomFilterMightContain(_, _))),
+    fn("graft_vector_sum", classOf[VectorDecimalSum])(vectorSum))
+
+  val names: Seq[String] = table.map(_.name)
+
+  private[plans] def vectorSum(name: String): FunctionBuilder = { exprs =>
     require(exprs.length == 3,
-      "graft_vector_sum expects exactly 3 arguments " +
+      s"$name expects exactly 3 arguments " +
         s"(array<double>, int precision, int scale), got ${exprs.length}")
     VectorDecimalSum(exprs(0), exprs(1), exprs(2))
   }
-
-  /** Spark's Bloom sketch pair (`BloomFilterAggregate` /
-    * `BloomFilterMightContain`) — engine-native, codegen'd, but with no
-    * public DSL wrapper and (in this build) no SQL registration for the
-    * probe side; exposed here for [[graft.operators.Dedup.bloomDedupNew]].
-    * The aggregate's estimated-items argument is CAST to LongType so SQL
-    * integer literals type-check; the probe's sketch side must be
-    * foldable (a literal) per the expression's own input check. */
-  private[plans] val bloomAggBuilder: Seq[Expression] => Expression =
-    binary("graft_bloom_agg", "(bigint hash, bigint estimated_items)",
-      (child, est) =>
-        new org.apache.spark.sql.catalyst.expressions.aggregate
-          .BloomFilterAggregate(child,
-            org.apache.spark.sql.catalyst.expressions.Cast(
-              est, org.apache.spark.sql.types.LongType)))
-  private[plans] val mightContainBuilder: Seq[Expression] => Expression =
-    binary("graft_might_contain", "(binary sketch, bigint hash)",
-      org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(_, _))
 
   /** arity gate: bad call sites get an analysis-time message naming the
     * function, not an IndexOutOfBoundsException from exprs(1). */
   private[plans] def binary(name: String, argTypes: String,
                             mk: (Expression, Expression) => Expression)
-      : Seq[Expression] => Expression = { exprs =>
+      : FunctionBuilder = { exprs =>
     require(exprs.length == 2,
       s"$name expects exactly 2 arguments $argTypes, got ${exprs.length}")
     mk(exprs(0), exprs(1))
@@ -62,7 +80,7 @@ object GraftFunctions {
 
   private[plans] def unary(name: String, argTypes: String,
                            mk: Expression => Expression)
-      : Seq[Expression] => Expression = { exprs =>
+      : FunctionBuilder = { exprs =>
     require(exprs.length == 1,
       s"$name expects exactly 1 argument $argTypes, got ${exprs.length}")
     mk(exprs(0))
@@ -70,68 +88,14 @@ object GraftFunctions {
 
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("graft_cosine",
-      binary("graft_cosine", "(array<float>, array<float>)", FloatCosine),
-      "built-in")
-    reg.createOrReplaceTempFunction("graft_jaccard_sorted",
-      binary("graft_jaccard_sorted", "(array<bigint>, array<bigint>)", SortedJaccard),
-      "built-in")
-    reg.createOrReplaceTempFunction("graft_pct_normalize",
-      unary("graft_pct_normalize", "(string)", PercentNormalize),
-      "built-in")
-    reg.createOrReplaceTempFunction("graft_jaro_winkler",
-      binary("graft_jaro_winkler", "(string, string)", JaroWinkler),
-      "built-in")
-    reg.createOrReplaceTempFunction("graft_bloom_agg", bloomAggBuilder,
-      "built-in")
-    reg.createOrReplaceTempFunction("graft_might_contain", mightContainBuilder,
-      "built-in")
-    reg.createOrReplaceTempFunction("graft_vector_sum", vectorSumBuilder,
-      "built-in")
+    table.foreach(f => reg.createOrReplaceTempFunction(f.name, f.builder, "built-in"))
   }
 }
 
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectFunction((
-      org.apache.spark.sql.catalyst.FunctionIdentifier("graft_cosine"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[FloatCosine].getName, "graft_cosine"),
-      GraftFunctions.binary("graft_cosine",
-        "(array<float>, array<float>)", FloatCosine)))
-    e.injectFunction((
-      org.apache.spark.sql.catalyst.FunctionIdentifier("graft_jaccard_sorted"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[SortedJaccard].getName, "graft_jaccard_sorted"),
-      GraftFunctions.binary("graft_jaccard_sorted",
-        "(array<bigint>, array<bigint>)", SortedJaccard)))
-    e.injectFunction((
-      org.apache.spark.sql.catalyst.FunctionIdentifier("graft_pct_normalize"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[PercentNormalize].getName, "graft_pct_normalize"),
-      GraftFunctions.unary("graft_pct_normalize", "(string)", PercentNormalize)))
-    e.injectFunction((
-      org.apache.spark.sql.catalyst.FunctionIdentifier("graft_jaro_winkler"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[JaroWinkler].getName, "graft_jaro_winkler"),
-      GraftFunctions.binary("graft_jaro_winkler", "(string, string)",
-        JaroWinkler)))
-    e.injectFunction((
-      org.apache.spark.sql.catalyst.FunctionIdentifier("graft_bloom_agg"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[org.apache.spark.sql.catalyst.expressions.aggregate
-          .BloomFilterAggregate].getName, "graft_bloom_agg"),
-      GraftFunctions.bloomAggBuilder))
-    e.injectFunction((
-      org.apache.spark.sql.catalyst.FunctionIdentifier("graft_might_contain"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[org.apache.spark.sql.catalyst.expressions
-          .BloomFilterMightContain].getName, "graft_might_contain"),
-      GraftFunctions.mightContainBuilder))
-    e.injectFunction((
-      org.apache.spark.sql.catalyst.FunctionIdentifier("graft_vector_sum"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[VectorDecimalSum].getName, "graft_vector_sum"),
-      GraftFunctions.vectorSumBuilder))
-  }
+  override def apply(e: SparkSessionExtensions): Unit =
+    GraftFunctions.table.foreach { f =>
+      e.injectFunction((FunctionIdentifier(f.name),
+        new ExpressionInfo(f.infoClass.getName, f.name), f.builder))
+    }
 }

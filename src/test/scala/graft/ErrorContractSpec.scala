@@ -152,45 +152,49 @@ class ErrorContractSpec extends AnyFunSuite {
     val rows = (1 to 10).map(i => Row(i.toLong, i.toDouble))
     val d = Df.fromRows(spark, rows, StructType(Seq(
       StructField("x", LongType), StructField("y", DoubleType))))
-    spark.conf.set("graft.keylessWindowMaxRows", "lots")
-    try {
-      // withRank is the remaining keyless-WINDOW verb (diff/ffill/
-      // pct_change route through GroupedScan since r15 and never read
-      // this config)
-      val e = intercept[IllegalArgumentException](d.withRank("y", "r"))
-      assert(e.getMessage.contains("graft.keylessWindowMaxRows") &&
-        e.getMessage.contains("lots"), e.getMessage)
-    } finally spark.conf.unset("graft.keylessWindowMaxRows")
+    Seq("lots", "-5").foreach { bad =>
+      spark.conf.set("graft.keylessWindowMaxRows", bad)
+      try {
+        // withRank is the remaining keyless-WINDOW verb (diff/ffill/
+        // pct_change route through GroupedScan since r15 and never read
+        // this config)
+        val e = intercept[IllegalArgumentException](d.withRank("y", "r"))
+        assert(e.getMessage.contains("graft.keylessWindowMaxRows") &&
+          e.getMessage.contains(bad), e.getMessage)
+      } finally spark.conf.unset("graft.keylessWindowMaxRows")
+    }
   }
 
   test("malformed spark.graft.dedup.pairsPrecountBytes names the config, not a bare NumberFormatException") {
     val docs = Df.fromRows(spark, Seq(Row(1L, "a b c"), Row(2L, "a b c")),
       StructType(Seq(StructField("doc_id", LongType), StructField("text", StringType))))
     val key = "spark.graft.dedup.pairsPrecountBytes"
-    spark.conf.set(key, "16MiB")
-    try {
-      // NumberFormatException IS an IllegalArgumentException: the raw
-      // parse error must not pass for the named one
-      val e = intercept[IllegalArgumentException](
-        graft.operators.Dedup.minhashPairs(docs, "text", "doc_id"))
-      assert(!e.isInstanceOf[NumberFormatException], e.toString)
-      assert(e.getMessage.contains(key) && e.getMessage.contains("16MiB"), e.getMessage)
-    } finally spark.conf.unset(key)
+    Seq("16MiB", "-1").foreach { bad =>
+      spark.conf.set(key, bad)
+      try {
+        // NumberFormatException IS an IllegalArgumentException: the raw
+        // parse error must not pass for the named one
+        val e = intercept[IllegalArgumentException](
+          graft.operators.Dedup.minhashPairs(docs, "text", "doc_id"))
+        assert(!e.isInstanceOf[NumberFormatException], e.toString)
+        assert(e.getMessage.contains(key) && e.getMessage.contains(bad), e.getMessage)
+      } finally spark.conf.unset(key)
+    }
   }
 
   test("malformed spark.graft.scan.persistAutoBytes names the config, not a bare NumberFormatException") {
-    // the key is read only when neither the call nor the environment
-    // chose the GroupedScan persist path
-    assume(!sys.env.contains("SPARK_GRAFT_SCAN_PERSIST"),
-      "env override set - adaptive default not reachable")
+    // the key is read only when the call did not choose the GroupedScan
+    // persist path
     val key = "spark.graft.scan.persistAutoBytes"
-    spark.conf.set(key, "1.5GiB")
-    try {
-      val e = intercept[IllegalArgumentException](
-        d.scanKeyless(Seq("x"))(_.cumsum("y", "cs")))
-      assert(!e.isInstanceOf[NumberFormatException], e.toString)
-      assert(e.getMessage.contains(key) && e.getMessage.contains("1.5GiB"), e.getMessage)
-    } finally spark.conf.unset(key)
+    Seq("1.5GiB", "-1").foreach { bad =>
+      spark.conf.set(key, bad)
+      try {
+        val e = intercept[IllegalArgumentException](
+          d.scanKeyless(Seq("x"))(_.cumsum("y", "cs")))
+        assert(!e.isInstanceOf[NumberFormatException], e.toString)
+        assert(e.getMessage.contains(key) && e.getMessage.contains(bad), e.getMessage)
+      } finally spark.conf.unset(key)
+    }
   }
 
   test("keyless withRank trips a named ceiling; diff/ffill/pctChange route scalably past it") {

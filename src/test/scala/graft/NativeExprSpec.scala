@@ -257,11 +257,35 @@ class NativeExprSpec extends AnyFunSuite {
   }
 
   test("SparkSessionExtensions wiring registers the function") {
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    import org.apache.spark.sql.catalyst.analysis.UnresolvedFunction
+    // one well-formed call per function; the key set must be the table's
+    val calls = Map(
+      "graft_cosine" -> "array(CAST(3.0 AS FLOAT)), array(CAST(4.0 AS FLOAT))",
+      "graft_jaccard_sorted" -> "array(1L, 2L), array(2L, 3L)",
+      "graft_pct_normalize" -> "'a%20b'",
+      "graft_jaro_winkler" -> "'martha', 'marhta'",
+      "graft_bloom_agg" -> "xxhash64('a'), 10",
+      "graft_might_contain" -> "X'00', xxhash64('a')",
+      "graft_vector_sum" -> "array(1.0D, 2.0D), 18, 8")
+    assert(calls.keySet == GraftFunctions.names.toSet)
+    // direct path: register on a fresh session
     val s2 = TestSpark.spark.newSession()
-    new graft.plans.GraftExtensions().apply(
-      new org.apache.spark.sql.SparkSessionExtensions)
-    // direct registry path (what the extensions hook installs per session)
     GraftFunctions.register(s2)
+    val direct = s2.sessionState.functionRegistry
+    // extension path: the registry a session built with the extension gets
+    val viaExt = org.apache.spark.sql.GraftExtensionsRegistry
+      .functionRegistry(new graft.plans.GraftExtensions)
+    GraftFunctions.names.foreach { n =>
+      val id = FunctionIdentifier(n)
+      assert(direct.functionExists(id), s"$n missing on the direct path")
+      assert(viaExt.functionExists(id), s"$n missing on the extension path")
+      val args = s2.sessionState.sqlParser.parseExpression(s"$n(${calls(n)})")
+        .asInstanceOf[UnresolvedFunction].arguments
+      val fromExt = viaExt.lookupFunction(id, args)
+      assert(fromExt.getClass.getName == viaExt.lookupFunction(id).get.getClassName, n)
+      assert(direct.lookupFunction(id, args).getClass == fromExt.getClass, n)
+    }
     assert(s2.sql("SELECT graft_cosine(array(CAST(3.0 AS FLOAT)), array(CAST(4.0 AS FLOAT)))")
       .collect()(0).getDouble(0) == 1.0)
   }

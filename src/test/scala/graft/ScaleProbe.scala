@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** One-off scale probe for the iterative operators' ABOVE-GATE paths
@@ -18,15 +17,9 @@ import org.apache.spark.sql.functions._
   */
 object ScaleProbe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      // heap comes from build.sbt's javaOptions -Xmx (SPARK_DRIVER_MEM,
-      // default 8g): spark.driver.memory on a running local JVM is a no-op
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // heap comes from build.sbt's javaOptions -Xmx (SPARK_DRIVER_MEM,
+    // default 8g): spark.driver.memory on a running local JVM is a no-op
+    val spark = GraftSession.local(32)
 
     // AtomicLong, not `@volatile var += ...`: the += is a non-atomic
     // read-modify-write that only happens to be safe while the shared

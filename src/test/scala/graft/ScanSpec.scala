@@ -1007,7 +1007,7 @@ class ScanSpec extends AnyFunSuite {
     Df.releaseRetained()
   }
 
-  test("per-call persistSorted overrides the env default, both values in " +
+  test("per-call persistSorted overrides the adaptive default, both values in " +
        "one JVM, identical results, blocks drain via releaseRetained") {
     val rows = (0 until 200).map { i =>
       Row(i.toLong, 0, i % 7, if (i % 9 == 0) null else (i % 11).toDouble,
@@ -1047,8 +1047,6 @@ class ScanSpec extends AnyFunSuite {
 
   test("adaptive persistSorted default: flips ON past the size threshold, " +
        "stays OFF below it, explicit Some(false) still wins (r21)") {
-    assume(!sys.env.contains("SPARK_GRAFT_SCAN_PERSIST"),
-      "env override set - adaptive default not reachable")
     val rows = (0 until 200).map { i =>
       Row(i.toLong, 0, i % 7, (i % 11).toDouble, null, null)
     }.toList
