@@ -1,5 +1,6 @@
 package graft.api
 
+import graft.operators.FanOut
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -1488,7 +1489,9 @@ object Df {
     * rewrites the reference hand-rolls in `io/parquet.py:162-317`. The
     * schema comes from one footer read on the driver ([[FooterSchema]]),
     * so building the frame runs no Spark job, as `ReadParquet._meta`
-    * runs none. */
+    * runs none. A read Spark scans in one partition is marked
+    * single-split, as every file reader below marks it
+    * ([[graft.operators.FanOut.singleSplit]]). */
   def readParquet(spark: SparkSession, path: String, columns: Seq[String] = Nil): Df = {
     val base = FooterSchema.read(spark, path)
     new Df(if (columns.isEmpty) base else base.select(columns.map(base(_)): _*))
@@ -1500,7 +1503,7 @@ object Df {
               schema: StructType = null, usecols: Seq[String] = Nil): Df = {
     var r = spark.read.option("header", header.toString)
     r = if (schema != null) r.schema(schema) else r.option("inferSchema", "true")
-    val base = r.csv(path)
+    val base = FanOut.singleSplit(r.csv(path))
     new Df(if (usecols.isEmpty) base else base.select(usecols.map(base(_)): _*))
   }
   /** JSON Lines reader (beyond the reference's surface — corpus
@@ -1512,13 +1515,13 @@ object Df {
   def readJson(spark: SparkSession, path: String,
                schema: StructType = null, columns: Seq[String] = Nil): Df = {
     val r = if (schema != null) spark.read.schema(schema) else spark.read
-    val base = r.json(path)
+    val base = FanOut.singleSplit(r.json(path))
     new Df(if (columns.isEmpty) base else base.select(columns.map(base(_)): _*))
   }
   /** ORC reader — same pushdown/pruning contract as [[readParquet]]
     * (PlanSpec asserts the pushed filters reach the ORC scan). */
   def readOrc(spark: SparkSession, path: String, columns: Seq[String] = Nil): Df = {
-    val base = spark.read.orc(path)
+    val base = FanOut.singleSplit(spark.read.orc(path))
     new Df(if (columns.isEmpty) base else base.select(columns.map(base(_)): _*))
   }
   /** XML reader (native in Spark 4 — the spark-xml package folded into
@@ -1532,7 +1535,7 @@ object Df {
               schema: StructType = null, columns: Seq[String] = Nil): Df = {
     var r = spark.read.option("rowTag", rowTag)
     if (schema != null) r = r.schema(schema)
-    val base = r.xml(path)
+    val base = FanOut.singleSplit(r.xml(path))
     new Df(if (columns.isEmpty) base else base.select(columns.map(base(_)): _*))
   }
 
@@ -1552,7 +1555,7 @@ object Df {
                       globFilter: String = null): Df = {
     var r = spark.read.format("binaryFile")
     if (globFilter != null) r = r.option("pathGlobFilter", globFilter)
-    new Df(r.load(path))
+    new Df(FanOut.singleSplit(r.load(path)))
   }
 
   /** `PandasIO` (`io/io.py:17`): in-memory rows as a LocalRelation. */

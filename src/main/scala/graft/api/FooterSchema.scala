@@ -1,5 +1,6 @@
 package graft.api
 
+import graft.operators.FanOut
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS
 import org.apache.parquet.hadoop.{Footer, ParquetFileWriter}
@@ -26,19 +27,25 @@ import org.apache.spark.sql.types.StructType
   * footer must be merged, which is the job's real work), or there is
   * no readable file to take the schema from — Spark then raises its
   * own error ("Unable to infer schema", a missing path, a corrupt
-  * footer) exactly as before. */
+  * footer) exactly as before.
+  *
+  * A read that Spark scans in one partition comes back marked as a
+  * single-split read (`coalesce(1)`,
+  * [[graft.operators.FanOut.singleSplit]]), so aggregates, windows,
+  * sorts and joins over it plan no exchange. */
 object FooterSchema {
 
   /** parquet summary files, in the order schema inference prefers them */
   private val summaries = Seq(ParquetFileWriter.PARQUET_COMMON_METADATA_FILE,
     ParquetFileWriter.PARQUET_METADATA_FILE)
 
-  /** `spark.read.parquet(path)` with the schema resolved on the driver. */
+  /** `spark.read.parquet(path)` with the schema resolved on the driver,
+    * marked single-split when the listing packs into one partition. */
   def read(spark: SparkSession, path: String): DataFrame =
-    resolve(spark, path) match {
+    FanOut.singleSplit(resolve(spark, path) match {
       case Some(schema) => spark.read.schema(schema).parquet(path)
       case None         => spark.read.parquet(path)
-    }
+    })
 
   /** The data schema `spark.read.parquet(path)` infers, from one footer
     * read on the driver; `None` in the fallback cases above. The pick

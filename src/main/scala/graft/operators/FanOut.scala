@@ -30,6 +30,13 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
   * adds a shuffle where the scan already parallelizes. Round-robin
   * repartition keeps row multiplicity exactly (no key skew, no data
   * dependence), so it is semantics-free for every downstream operator.
+  *
+  * The same estimate marks single-split reads ([[singleSplit]]): a file
+  * read that the packing puts into exactly one partition is wrapped in
+  * `coalesce(1)`, so the planner sees `SinglePartition` and adds no
+  * exchange above it. [[narrowScanPartitions]] counts that marker as
+  * the one narrow partition it is, so a fan-out site over a marked read
+  * still fans out.
   */
 private[graft] object FanOut {
   def apply(df: DataFrame): DataFrame = {
@@ -41,9 +48,30 @@ private[graft] object FanOut {
     }
   }
 
+  /** A batch file read that Spark's split packing scans in exactly one
+    * partition, marked as such: `coalesce(1)`, a narrow
+    * `Repartition(1, shuffle = false)` that plans as `CoalesceExec` with
+    * `SinglePartition` output. `EnsureRequirements` then adds no exchange
+    * for an aggregate, window, global sort or join between such reads,
+    * and the query runs as one stage — the reference's one-partition
+    * execution, taken only where the scan was one task anyway. The scan's
+    * parallelism does not change; only the post-shuffle parallelism that
+    * AQE's coalescing mostly removes at this size is given up. The
+    * decision reads the file listing only ([[narrowScanPartitions]]):
+    * no job, and no reader is built. Any other frame (a read Spark
+    * splits, a streaming read, a plan above the relation) comes back
+    * as is; `repartition(n)` on the result restores parallelism. */
+  private[graft] def singleSplit(df: DataFrame): DataFrame =
+    df.queryExecution.analyzed match {
+      case l: LogicalRelation if l.relation.isInstanceOf[HadoopFsRelation] &&
+          narrowScanPartitions(df).contains(1L) => df.coalesce(1)
+      case _ => df
+    }
+
   /** Planning-time estimate of the scan parallelism of a purely-narrow
     * plan: projections / filters / generators over file or local
-    * relations only. `None` ⇒ the plan shuffles on its own, or holds a
+    * relations only, and the [[singleSplit]] marker over a file
+    * relation. `None` ⇒ the plan shuffles on its own, or holds a
     * leaf we can't size without running a job — either way FanOut must
     * be a no-op. */
   private[graft] def narrowScanPartitions(df: DataFrame): Option[Long] = {
@@ -67,6 +95,9 @@ private[graft] object FanOut {
       // leaf contributions are summed by this same walk
       case _: Project | _: Filter | _: Generate | _: SubqueryAlias |
            _: Union => ()
+      // the single-split marker: its relation, counted by this same
+      // walk, packs into the one partition the coalesce keeps
+      case Repartition(1, false, _: LogicalRelation) => ()
       case _ => sizable = false // wide node or unknown leaf
     }
     if (sizable) Some(math.max(parts, 1L)) else None

@@ -27,7 +27,9 @@ object GraftFunctions {
   /** One native function: its SQL name, the class its `ExpressionInfo`
     * names, and its arity-checked builder. */
   private[plans] final case class Fn(name: String, infoClass: Class[_],
-                                     builder: FunctionBuilder)
+                                     builder: FunctionBuilder) {
+    def info: ExpressionInfo = new ExpressionInfo(infoClass.getName, name)
+  }
 
   private def fn(name: String, infoClass: Class[_])(
       mk: String => FunctionBuilder): Fn = Fn(name, infoClass, mk(name))
@@ -86,16 +88,24 @@ object GraftFunctions {
     mk(exprs(0))
   }
 
+  /** Registers each function of [[table]] the session does not already
+    * carry: a name whose registered `ExpressionInfo` names the same
+    * class (an earlier call, or [[GraftExtensions]]) is left as it is, so
+    * the operators that call this on every build neither redo the work
+    * nor log Spark's "replaced a previously registered function". */
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
-    table.foreach(f => reg.createOrReplaceTempFunction(f.name, f.builder, "built-in"))
+    table.foreach { f =>
+      val id = FunctionIdentifier(f.name)
+      if (!reg.lookupFunction(id).exists(_.getClassName == f.infoClass.getName))
+        reg.registerFunction(id, f.info, f.builder)
+    }
   }
 }
 
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit =
     GraftFunctions.table.foreach { f =>
-      e.injectFunction((FunctionIdentifier(f.name),
-        new ExpressionInfo(f.infoClass.getName, f.name), f.builder))
+      e.injectFunction((FunctionIdentifier(f.name), f.info, f.builder))
     }
 }

@@ -69,18 +69,31 @@ object ScanCSE extends Rule[LogicalPlan] {
       case _ => None
     }
 
+  /** a file relation, bare or under the single-split marker
+    * ([[graft.operators.FanOut.singleSplit]]): the marker is one
+    * partition of the same read, so it merges like the bare relation
+    * and the shared exchange replaces it along with the relation */
+  private object FileRead {
+    def unapply(p: LogicalPlan): Option[LogicalRelation] = p match {
+      case r: LogicalRelation if relKey(r).isDefined => Some(r)
+      case Repartition(1, false, r: LogicalRelation) if relKey(r).isDefined => Some(r)
+      case _ => None
+    }
+  }
+
   override def apply(plan: LogicalPlan): LogicalPlan = {
     if (!conf.getConfString(ConfKey, "false").toBoolean) return plan
     // candidate occurrences, in traversal order: a pruning/aliasing
-    // Project directly over a file relation, or a bare file relation
-    // consumed whole by a Join/Union. Anything else above the relation
-    // (Filter, Sample, limits, …) makes the read semantically
-    // different or narrower — out of scope, like the reference.
+    // Project directly over a file read, or a bare file read consumed
+    // whole by a Join/Union (a read is a relation or its marker).
+    // Anything else above the relation (Filter, Sample, limits, …)
+    // makes the read semantically different or narrower — out of
+    // scope, like the reference.
     val projected = scala.collection.mutable.ArrayBuffer
       .empty[(Project, LogicalRelation)]
     plan.foreach {
-      case p @ Project(list, r: LogicalRelation)
-          if relKey(r).isDefined && list.forall(ne =>
+      case p @ Project(list, FileRead(r))
+          if list.forall(ne =>
             ne.isInstanceOf[AttributeReference] || ne.isInstanceOf[Alias]) =>
         projected += ((p, r))
       case _ =>
@@ -90,18 +103,18 @@ object ScanCSE extends Rule[LogicalPlan] {
     // Sample, limit, …) is a semantically narrower read — merging it
     // would trade its pushed-down pruned scan for a full-width shared
     // scan + shuffle, the exact anti-pattern the scaladoc excludes
-    val bare = scala.collection.mutable.ArrayBuffer.empty[LogicalRelation]
+    val bare = scala.collection.mutable.ArrayBuffer
+      .empty[(LogicalPlan, LogicalRelation)]
     plan.foreach { node =>
       val allowed = node.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.Join] ||
         node.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.Union]
       if (allowed) node.children.foreach {
-        case r: LogicalRelation if relKey(r).isDefined => bare += r
+        case read @ FileRead(r) => bare += ((read, r))
         case _ =>
       }
     }
     val occurrences: Seq[(LogicalPlan, LogicalRelation)] =
-      (projected.toSeq: Seq[(LogicalPlan, LogicalRelation)]) ++
-        bare.toSeq.map(r => (r: LogicalPlan, r))
+      (projected.toSeq: Seq[(LogicalPlan, LogicalRelation)]) ++ bare.toSeq
     val replacements = new java.util.IdentityHashMap[LogicalPlan, LogicalPlan]
     occurrences.groupBy { case (_, r) => relKey(r).get }.values.foreach { group =>
       // ≥2 distinct subtree INSTANCES: a group whose occurrences are
@@ -117,7 +130,7 @@ object ScanCSE extends Rule[LogicalPlan] {
         val canonByName = canonical.output.map(a => a.name -> a).toMap
         val needed = group.flatMap {
           case (p: Project, _) => p.references.map(_.name).toSeq
-          case (r: LogicalRelation, _) => r.output.map(_.name)
+          case (_, r) => r.output.map(_.name)
         }.toSet
         val unionAttrs = canonical.output.filter(a => needed.contains(a.name))
         // ONE shared instance: every consumer's exchange subtree is
@@ -143,7 +156,7 @@ object ScanCSE extends Rule[LogicalPlan] {
             }
             val list = sub match {
               case p: Project => p.projectList.map(remap)
-              case r: LogicalRelation => r.output.map(remap)
+              case _ => rel.output.map(remap)
             }
             replacements.put(sub, Project(list, shared))
           }

@@ -11,6 +11,16 @@ object TestSpark {
   lazy val spark: SparkSession = GraftSession.local(4)
   val sf: String = "/root/testdata/sf0.001"
 
+  /** A session whose file reads split into several partitions even at
+    * [[sf]]'s size (16 KiB splits: lineitem 8, orders 3), so they are not
+    * single-split reads and keep the exchanges above them. Specs that
+    * pin an exchange of that path read through it. */
+  lazy val multiSplit: SparkSession = {
+    val s = spark.newSession()
+    s.conf.set("spark.sql.files.maxPartitionBytes", "16k")
+    s
+  }
+
   // NOTE: suites that count jobs via SparkListener drain the async bus
   // deterministically with org.apache.spark.GraftListenerBusSync
   // .waitUntilEmpty — do NOT reintroduce sleep-polling (the r17 flake

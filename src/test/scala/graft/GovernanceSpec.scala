@@ -321,7 +321,8 @@ class GovernanceSpec extends AnyFunSuite {
     assert(got.toSeq == Seq(("a", 1L, 3L, 3L), ("a", 7L, 8L, 2L),
       ("a", 12L, 12L, 1L), ("b", 5L, 6L, 2L)))
     // window partitioning (k) ⊂ agg grouping (k, run) → one exchange
-    val li = Df.readParquet(spark, s"$sf/lineitem.parquet")
+    // (over a read Spark splits; a single-split read plans none)
+    val li = Df.readParquet(multiSplit, s"$sf/lineitem.parquet")
     val p = plan(Profiling.sequenceIslands(li, Seq("l_returnflag"),
       "l_orderkey").sdf)
     assert("Exchange".r.findAllIn(p).size == 1, p)

@@ -289,4 +289,26 @@ class NativeExprSpec extends AnyFunSuite {
     assert(s2.sql("SELECT graft_cosine(array(CAST(3.0 AS FLOAT)), array(CAST(4.0 AS FLOAT)))")
       .collect()(0).getDouble(0) == 1.0)
   }
+  test("a second register leaves every function's ExpressionInfo as it was") {
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    val s2 = TestSpark.spark.newSession()
+    GraftFunctions.register(s2)
+    val reg = s2.sessionState.functionRegistry
+    val first = GraftFunctions.names.map(n => n -> reg.lookupFunction(FunctionIdentifier(n)).get)
+    GraftFunctions.register(s2)
+    first.foreach { case (n, info) =>
+      val again = reg.lookupFunction(FunctionIdentifier(n))
+      assert(again.exists(_ eq info), s"$n was registered again")
+      assert(info.getName == n)
+    }
+    // every name still resolves through the session
+    val r = s2.sql("SELECT graft_jaro_winkler('martha', 'marhta'), " +
+      "graft_pct_normalize('a%20b'), graft_jaccard_sorted(array(1L, 2L), array(2L, 3L)), " +
+      "graft_cosine(array(CAST(3.0 AS FLOAT)), array(CAST(4.0 AS FLOAT))), " +
+      "graft_might_contain((SELECT graft_bloom_agg(xxhash64(id), 10L) FROM range(3)), " +
+      "xxhash64(1L))").collect()
+    assert(r.length == 1 && r(0).getDouble(3) == 1.0 && r(0).getBoolean(4))
+    assert(s2.sql("SELECT graft_vector_sum(array(CAST(id AS DOUBLE)), 18, 8) FROM range(3)")
+      .collect().length == 1)
+  }
 }

@@ -80,7 +80,8 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("duplicatedWindows plans hash-keyed (dup-detect reuses the window exchange; no cartesian)") {
-    val d = Df.readParquet(spark, s"$sf/lineitem.parquet")
+    // a read Spark splits: a single-split read plans no exchange at all
+    val d = Df.readParquet(multiSplit, s"$sf/lineitem.parquet")
       .select("l_orderkey", "l_returnflag")
       .rename(Map("l_orderkey" -> "doc_id", "l_returnflag" -> "text"))
     val res = graft.operators.Dedup.duplicatedWindows(d, "text", "doc_id", k = 1)
@@ -130,7 +131,9 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("elementwise chains stay inside one WholeStageCodegen span") {
-    val li = Df.readParquet(spark, s"$sf/lineitem.parquet")
+    // a read Spark splits: a single-split read's `Coalesce 1` is not
+    // codegen'd, so the projections above it start a second stage
+    val li = Df.readParquet(multiSplit, s"$sf/lineitem.parquet")
     val q = li.assign("a", li("l_quantity").clip(5, 45))
       .assign("b", (li("l_extendedprice") * 2).round(2))
       .where(li("l_discount") > 0.01)
@@ -166,7 +169,10 @@ class PlanSpec extends AnyFunSuite {
     // sharing the Df keeps one plan subtree and the physical planner
     // reuses the shuffle for its second appearance
     // AQE defers reuse to stage materialization; turn it off to see the
-    // static ReusedExchange (at runtime AQE reuses the stage either way)
+    // static ReusedExchange (at runtime AQE reuses the stage either way).
+    // The read is one Spark splits: a single-split read's aggregate
+    // plans no exchange to reuse.
+    val spark = multiSplit
     val prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
@@ -187,6 +193,8 @@ class PlanSpec extends AnyFunSuite {
     // lineage: two separate readParquet(path) calls canonicalize to the
     // same plan, so whenever an exchange sits above each scan the
     // second one becomes a ReusedExchange and only ONE file scan runs.
+    // Reads Spark splits, as above: single-split reads plan no exchange.
+    val spark = multiSplit
     val prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {

@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """Plan-fingerprint diff (BASELINE.md "Plan-fingerprint gate").
 
-Usage: python3 tools/plandiff.py OLD_plans.json NEW_plans.json
+Usage: python3 tools/plandiff.py [--summary] OLD_plans.json NEW_plans.json
 
 Compares the per-query fingerprints graft.Plans emits and prints one
 line per changed query: which counters moved (shuffle/broadcast/cached/
@@ -9,6 +9,12 @@ sorts), scans added/removed, and any scan whose ReadSchema column set
 or pushed-filter string changed. Exit 0 when identical, 1 when any
 query differs, 2 when the query sets differ (added/removed queries are
 listed but may be intentional surface changes).
+
+--summary sorts each changed query into one of two classes instead:
+"only shuffleExchanges went down" (every other counter and the scan
+multiset are unchanged) or "anything else", prints each class with its
+queries, and exits 0 when every change is of the first class, 1 when
+any is of the second, 2 when the query sets differ.
 """
 import json
 import sys
@@ -25,29 +31,60 @@ def scankey(s):
             s["partitionFilters"], s["dataFilters"])
 
 
+COUNTERS = ("shuffleExchanges", "broadcastExchanges", "cachedScans", "sorts")
+FEWER_SHUFFLES = "only shuffleExchanges went down"
+OTHER = "anything else"
+
+
+def diff(o, n):
+    """the change messages for one query; empty when identical"""
+    msgs = []
+    for k in COUNTERS:
+        if o[k] != n[k]:
+            msgs.append(f"{k} {o[k]}->{n[k]}")
+    # multiset compare (ADVICE r20): sorted-list membership missed
+    # multiplicity-only drift (e.g. a duplicated scan [A,A] -> [A] —
+    # a self-join collapsing to one read, or a scan duplicating) —
+    # count deltas per distinct fingerprint so those flag as changed.
+    oc, nc = Counter(map(scankey, o["scans"])), Counter(map(scankey, n["scans"]))
+    if oc != nc:
+        for s in sorted(set(oc) | set(nc)):
+            if oc[s] != nc[s]:
+                msgs.append(f"scan count {oc[s]}->{nc[s]} cols={list(s[0])} pushed={s[1]}")
+    return msgs
+
+
+def classify(o, n):
+    """FEWER_SHUFFLES when the one difference is fewer shuffle exchanges"""
+    fewer = n["shuffleExchanges"] < o["shuffleExchanges"]
+    rest_same = all(o[k] == n[k] for k in COUNTERS[1:]) and \
+        Counter(map(scankey, o["scans"])) == Counter(map(scankey, n["scans"]))
+    return FEWER_SHUFFLES if fewer and rest_same else OTHER
+
+
 def main():
-    old, new = load(sys.argv[1]), load(sys.argv[2])
+    args = sys.argv[1:]
+    summary = "--summary" in args
+    args = [a for a in args if a != "--summary"]
+    old, new = load(args[0]), load(args[1])
     added = sorted(set(new) - set(old))
     removed = sorted(set(old) - set(new))
     changed = 0
+    classes = {FEWER_SHUFFLES: [], OTHER: []}
     for name in sorted(set(old) & set(new)):
-        o, n = old[name], new[name]
-        msgs = []
-        for k in ("shuffleExchanges", "broadcastExchanges", "cachedScans", "sorts"):
-            if o[k] != n[k]:
-                msgs.append(f"{k} {o[k]}->{n[k]}")
-        # multiset compare (ADVICE r20): sorted-list membership missed
-        # multiplicity-only drift (e.g. a duplicated scan [A,A] -> [A] —
-        # a self-join collapsing to one read, or a scan duplicating) —
-        # count deltas per distinct fingerprint so those flag as changed.
-        oc, nc = Counter(map(scankey, o["scans"])), Counter(map(scankey, n["scans"]))
-        if oc != nc:
-            for s in sorted(set(oc) | set(nc)):
-                if oc[s] != nc[s]:
-                    msgs.append(f"scan count {oc[s]}->{nc[s]} cols={list(s[0])} pushed={s[1]}")
+        msgs = diff(old[name], new[name])
         if msgs:
             changed += 1
-            print(f"{name}: " + "; ".join(msgs))
+            line = f"{name}: " + "; ".join(msgs)
+            if summary:
+                classes[classify(old[name], new[name])].append(line)
+            else:
+                print(line)
+    if summary:
+        for cls, lines in classes.items():
+            print(f"{cls}: {len(lines)}")
+            for line in lines:
+                print(f"  {line}")
     if added:
         print(f"added queries ({len(added)}): {', '.join(added)}")
     if removed:
@@ -56,6 +93,8 @@ def main():
           f"added: {len(added)}, removed: {len(removed)}")
     if added or removed:
         sys.exit(2)
+    if summary:
+        sys.exit(1 if classes[OTHER] else 0)
     sys.exit(1 if changed else 0)
 
 
