@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.plans.SingleSplit
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
@@ -50,21 +51,26 @@ private[graft] object FanOut {
 
   /** A batch file read that Spark's split packing scans in exactly one
     * partition, marked as such: `coalesce(1)`, a narrow
-    * `Repartition(1, shuffle = false)` that plans as `CoalesceExec` with
-    * `SinglePartition` output. `EnsureRequirements` then adds no exchange
-    * for an aggregate, window, global sort or join between such reads,
-    * and the query runs as one stage — the reference's one-partition
-    * execution, taken only where the scan was one task anyway. The scan's
-    * parallelism does not change; only the post-shuffle parallelism that
-    * AQE's coalescing mostly removes at this size is given up. The
-    * decision reads the file listing only ([[narrowScanPartitions]]):
-    * no job, and no reader is built. Any other frame (a read Spark
-    * splits, a streaming read, a plan above the relation) comes back
-    * as is; `repartition(n)` on the result restores parallelism. */
+    * `Repartition(1, shuffle = false)` with `SinglePartition` output.
+    * `EnsureRequirements` then adds no exchange for an aggregate, window,
+    * global sort or join between such reads, and the query runs as one
+    * stage — the reference's one-partition execution, taken only where
+    * the scan was one task anyway. The marker plans as
+    * [[graft.plans.SingleSplitExec]] (the strategy is installed here on
+    * the session), which whole-stage codegen runs through. The scan's
+    * parallelism does not change; the post-shuffle parallelism above it
+    * is given up (measured on 4 cores only: USAGE.md "Single-split
+    * reads"). The decision reads the file listing
+    * only ([[narrowScanPartitions]]): no job, and no reader is built. Any
+    * other frame (a read Spark splits, a streaming read, a plan above the
+    * relation) comes back as is; `repartition(n)` on the result restores
+    * parallelism. */
   private[graft] def singleSplit(df: DataFrame): DataFrame =
     df.queryExecution.analyzed match {
       case l: LogicalRelation if l.relation.isInstanceOf[HadoopFsRelation] &&
-          narrowScanPartitions(df).contains(1L) => df.coalesce(1)
+          narrowScanPartitions(df).contains(1L) =>
+        SingleSplit.install(df.sparkSession)
+        df.coalesce(1)
       case _ => df
     }
 

@@ -131,9 +131,7 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("elementwise chains stay inside one WholeStageCodegen span") {
-    // a read Spark splits: a single-split read's `Coalesce 1` is not
-    // codegen'd, so the projections above it start a second stage
-    val li = Df.readParquet(multiSplit, s"$sf/lineitem.parquet")
+    val li = Df.readParquet(spark, s"$sf/lineitem.parquet")
     val q = li.assign("a", li("l_quantity").clip(5, 45))
       .assign("b", (li("l_extendedprice") * 2).round(2))
       .where(li("l_discount") > 0.01)

@@ -2,6 +2,7 @@ package graft
 
 import graft.api.Df
 import graft.operators.{FanOut, GroupedScan, Quantiles}
+import graft.plans.SingleSplit
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.Repartition
 import org.apache.spark.sql.functions._
@@ -9,7 +10,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Single-split reads ([[graft.operators.FanOut.singleSplit]]): a file
   * read Spark scans in one partition is marked `coalesce(1)`, so the
-  * query above it plans no exchange and runs as one stage. The other
+  * query above it plans no exchange and runs as one stage, and the marker
+  * plans as the codegen-transparent [[graft.plans.SingleSplitExec]]. The other
   * side — a read Spark splits — keeps its exchanges, and both sides give
   * the same rows. [[TestSpark.multiSplit]] is the other side: the same
   * files read with a split size small enough that every table splits. */
@@ -52,11 +54,55 @@ class SingleSplitSpec extends AnyFunSuite {
     val q = aggSorted(spark)
     val c = PlanCensus.of(q)
     assert(c.shuffleExchanges == 0, q.queryExecution.executedPlan.toString)
-    assert(q.queryExecution.executedPlan.toString.contains("Coalesce 1"),
+    assert(q.queryExecution.executedPlan.toString.contains("SingleSplit"),
       q.queryExecution.executedPlan.toString)
     val (got, jobs) = jobsDuring(aggSorted(spark).collect())
     assert(got.nonEmpty)
     assert(jobs == 1, s"the action ran $jobs jobs")
+  }
+
+  test("the marker passes whole-stage codegen through: scan, filter and projections fuse") {
+    def q(s: SparkSession) = {
+      val read = li(s)
+      read.assign("a", read("l_quantity") * 2).where(read("l_discount") > 0.01)
+        .select("a").sdf
+    }
+    val p = q(spark).queryExecution.executedPlan.toString
+    assert(p.contains("*(1) SingleSplit"), p)
+    assert(!p.contains("Coalesce"), p)
+    assert("""\*\((\d+)\)""".r.findAllMatchIn(p).map(_.group(1)).toSet == Set("1"), p)
+    assert(rows(q(spark)) == rows(q(multiSplit)))
+  }
+
+  test("the fused marker gives one partition over any scan, and one row for a global agg of none") {
+    SingleSplit.install(multiSplit)
+    val split = li(multiSplit).sdf
+    assert(split.rdd.getNumPartitions > 1)
+    val one = split.coalesce(1)
+    assert(one.queryExecution.executedPlan.toString.contains("SingleSplit"))
+    assert(one.rdd.getNumPartitions == 1)
+    assert(rows(one) == rows(split))
+    // all files pruned: the scan has no partition, the marker still one
+    val tmp = java.nio.file.Files.createTempDirectory("graft_single_pruned").toString
+    val r = li(spark).select("l_orderkey", "l_returnflag")
+    r.where(r("l_returnflag") === "R").toParquetPartitioned(tmp, Seq("l_returnflag"))
+    val back = Df.readParquet(spark, tmp)
+    assert(marked(back.sdf))
+    val none = back.sdf.where(col("l_returnflag") === "none")
+    val scan = none.queryExecution.sparkPlan.collectFirst {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec => s }.get
+    assert(scan.inputRDDs().head.getNumPartitions == 0)
+    assert(none.agg(count(lit(1)), sum("l_orderkey")).collect().toSeq.map(_.toSeq) ==
+      Seq(Seq(0L, null)))
+  }
+
+  test("a coalesce(1) over a partition-index-dependent projection keeps CoalesceExec") {
+    SingleSplit.install(multiSplit)
+    val q = li(multiSplit).sdf.withColumn("id", monotonically_increasing_id()).coalesce(1)
+    val p = q.queryExecution.executedPlan.toString
+    assert(p.contains("Coalesce 1"), p)
+    val ids = q.select("id").collect().map(_.getLong(0))
+    assert(ids.distinct.length == ids.length)
   }
 
   test("a multi-split read keeps its exchanges and is not marked") {
