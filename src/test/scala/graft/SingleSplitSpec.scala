@@ -61,19 +61,6 @@ class SingleSplitSpec extends AnyFunSuite {
     assert(jobs == 1, s"the action ran $jobs jobs")
   }
 
-  test("the marker passes whole-stage codegen through: scan, filter and projections fuse") {
-    def q(s: SparkSession) = {
-      val read = li(s)
-      read.assign("a", read("l_quantity") * 2).where(read("l_discount") > 0.01)
-        .select("a").sdf
-    }
-    val p = q(spark).queryExecution.executedPlan.toString
-    assert(p.contains("*(1) SingleSplit"), p)
-    assert(!p.contains("Coalesce"), p)
-    assert("""\*\((\d+)\)""".r.findAllMatchIn(p).map(_.group(1)).toSet == Set("1"), p)
-    assert(rows(q(spark)) == rows(q(multiSplit)))
-  }
-
   test("the fused marker gives one partition over any scan, and one row for a global agg of none") {
     SingleSplit.install(multiSplit)
     val split = li(multiSplit).sdf
