@@ -33,14 +33,11 @@ final class Df(val sdf: DataFrame, val indexCol: Option[String] = None) {
   def columns: Seq[String] = sdf.columns.toSeq
 
   /** Persisted intermediates this frame's plan references, attached by
-    * the operator that created them (the [[graft.operators.Dedup]]
-    * family). The cache-lifetime contract, unified across operators:
-    * whoever runs the TERMINAL action on an operator result releases
-    * its intermediates with [[unpersistIntermediates]] — precise,
+    * the operator that created them. [[graft.operators.Materialize]]
+    * states the cache-lifetime contract: what an operator holds, when
+    * it is attached here, and release on failure. Release with
+    * [[unpersistIntermediates]] after the terminal action — precise,
     * unlike `spark.catalog.clearCache()` which nukes unrelated caches.
-    * Iterative operators ([[graft.operators.Dedup.connectedComponents]])
-    * unpersist their superseded per-round checkpoints internally and
-    * attach only the final one, same contract.
     *
     * Frames DERIVED through Df combinators (`.where(...)`,
     * `.select(...)`, joins, …) INHERIT the attachment, so the precise
@@ -52,10 +49,10 @@ final class Df(val sdf: DataFrame, val indexCol: Option[String] = None) {
     * intermediate still live in the JVM. */
   private val retained =
     new java.util.concurrent.atomic.AtomicReference[List[DataFrame]](Nil)
-  /** operator-internal: attach persisted frames to this result */
+  /** operator-internal: attach persisted frames (already in the
+    * registry) to this result */
   private[graft] def retaining(frames: DataFrame*): Df = {
     retained.getAndUpdate(frames.toList ::: _)
-    frames.foreach(Df.retainedRegistry.add)
     this
   }
   /** Carry `from`'s retained attachments onto this derived frame (no new
@@ -972,10 +969,13 @@ final class Df(val sdf: DataFrame, val indexCol: Option[String] = None) {
     // contract), so the gate is row-identical on both sides: plain join
     // below, salted shuffle join above — exactly where skew can exist.
     // An unknown estimate (stats-less plan) stays on the salted path.
+    // The plain path needs the estimate to fit TWICE over: an estimate
+    // that underruns the runtime size would otherwise drop the
+    // requested salting for a join that then shuffles after all.
     val bcThresh = sdf.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
     val rSize = right.sdf.queryExecution.optimizedPlan.stats.sizeInBytes
     if (bcThresh >= 0 && rSize < BigInt(Long.MaxValue) / 2 &&
-        rSize <= BigInt(bcThresh))
+        rSize * Df.SaltBroadcastMargin <= BigInt(bcThresh))
       return derived(sdf.join(right.sdf, on, how)).inheriting(right)
     val l = sdf.withColumn("__salt",
       pmod(hash(on.map(sdf(_)) :+ monotonically_increasing_id(): _*), lit(salt)))
@@ -1422,7 +1422,8 @@ object Df {
         (i, o) => GroupedScan.Ewm(i, alpha, o)))
   }
 
-  /** every frame any graft operator persisted and attached, JVM-wide —
+  /** every frame any graft operator persisted, JVM-wide, from the
+    * moment it was persisted ([[graft.operators.Materialize]]) —
     * the fallback release path when the operator result Df was not kept
     * (see the instance-level caveat). Entries leave the registry when
     * their owning Df releases them or when [[releaseRetained]] drains
@@ -1435,12 +1436,12 @@ object Df {
     * call [[releaseRetained]] right before their per-query
     * `spark.catalog.clearCache()` fallback, so the registry drains once
     * per query; long-lived embedders should do the same. */
-  private[api] val retainedRegistry =
+  private[graft] val retainedRegistry =
     new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]
-  /** register an operator-persisted frame for the global drain without
-    * constructing a throwaway Df (the static face of [[Df.retaining]]) */
-  private[graft] def retainFrame(f: DataFrame): Unit =
-    retainedRegistry.add(f)
+
+  /** [[Df.saltedJoin]] skips the salt only when the right side's size
+    * estimate times this margin fits the broadcast threshold. */
+  private val SaltBroadcastMargin = 2
   /** Release EVERY graft-operator-persisted intermediate still live in
     * the JVM — the precise alternative to `spark.catalog.clearCache()`
     * for callers that dropped their operator-result handles. */

@@ -170,19 +170,17 @@ object Curation {
     *
     * The keyed frame is persisted: both union branches reference it and
     * Spark plans trees — unpersisted, the source scan plus the 9-regex
-    * canonicalization would run twice. Attached to the result per the
-    * [[Dedup]] cache-lifetime contract. */
-  def dedupByUrl(docs: Df, urlCol: String, idCol: String): Df = {
-    val withKey = Materialize.barrier(
-      docs.sdf.select(col(idCol), normalizeUrl(col(urlCol)).as("__u"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    * canonicalization would run twice. */
+  def dedupByUrl(docs: Df, urlCol: String, idCol: String): Df = Materialize.scope { s =>
+    val withKey = s.barrier(
+      docs.sdf.select(col(idCol), normalizeUrl(col(urlCol)).as("__u")))
     val keyed = withKey.where(col("__u").isNotNull)
       .groupBy(col("__u"))
       .agg(min(col(idCol)).as(idCol), count(lit(1)).as("n_copies"))
       .select(col(idCol), col("__u").as("canonical_url"), col("n_copies"))
     val nulls = withKey.where(col("__u").isNull)
       .select(col(idCol), col("__u").as("canonical_url"), lit(1L).as("n_copies"))
-    new Df(keyed.unionByName(nulls)).retaining(withKey)
+    new Df(keyed.unionByName(nulls))
   }
 
   /** Corpus-level exact line dedup (the C4 cleaning rule): every line
@@ -201,15 +199,11 @@ object Curation {
     *
     * The line table is persisted: it feeds the argmin, the join-back,
     * and the totals — Spark plans trees, so unpersisted the split+md5
-    * scan would run three times. It is attached to the result; release
-    * with `Df.unpersistIntermediates()` after the terminal action (the
-    * [[Dedup]] cache-lifetime convention). */
-  def dedupLines(docs: Df, textCol: String, idCol: String): Df = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val lines = Materialize.barrier(docs.sdf
+    * scan would run three times. */
+  def dedupLines(docs: Df, textCol: String, idCol: String): Df = Materialize.scope { s =>
+    val lines = s.barrier(docs.sdf
       .select(col(idCol), posexplode(split(col(textCol), "\n")).as(Seq("pos", "line")))
-      .withColumn("lh", hash32(col("line")))
-      .persist(lvl))
+      .withColumn("lh", hash32(col("line"))))
     val first = lines.groupBy(col("lh"))
       .agg(min(struct(col(idCol).as("d"), col("pos").as("p"))).as("f"))
     val kept = lines.join(first, Seq("lh"))
@@ -222,7 +216,7 @@ object Curation {
     val totals = lines.groupBy(col(idCol)).agg(count(lit(1)).as("n_lines"))
     new Df(totals.join(rebuilt, Seq(idCol), "left")
       .withColumn("n_kept", coalesce(col("n_kept"), lit(0L)))
-      .withColumn(textCol, coalesce(col(textCol), lit("")))).retaining(lines)
+      .withColumn(textCol, coalesce(col(textCol), lit(""))))
   }
 
   /** Token-budget sequence packing — assign each document to a fixed-
@@ -514,9 +508,8 @@ object Curation {
     * scores rank last (desc_nulls_last on both engines by contract). */
   def selectByTokenBudget(docs: Df, scoreCol: String, tokensCol: String,
                           idCol: String, budget: Long,
-                          numPartitions: Int = 0): Df = {
+                          numPartitions: Int = 0): Df = Materialize.scope { s =>
     require(budget >= 0, s"selectByTokenBudget: budget must be >= 0: $budget")
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     // a negative token count (tokenizer failure sentinel) would make
     // the running total non-monotone and silently re-admit rows after
     // the cut — the result would no longer be a prefix. Fail loudly at
@@ -532,8 +525,8 @@ object Curation {
     val ranged0 = docs.sdf.repartitionByRange(
       if (numPartitions > 0) numPartitions
       else Quantiles.pinnedShufflePartitions(docs.sdf), keys: _*)
-    val ranged = ranged0.sortWithinPartitions(keys: _*)
-      .withColumn("__pid", spark_partition_id()).persist(lvl)
+    val ranged = s.persist(ranged0.sortWithinPartitions(keys: _*)
+      .withColumn("__pid", spark_partition_id()))
     val totals = ranged.groupBy("__pid")
       .agg(coalesce(sum(tok), lit(0L)).as("__t"))
       .collect().map(r => r.getInt(0) -> r.getLong(1)).sortBy(_._1)
@@ -551,7 +544,7 @@ object Curation {
       .withColumn("cum_tokens",
         col("__offset") + coalesce(sum(tok).over(w), lit(0L)))
       .where(col("cum_tokens") <= budget)
-      .drop("__pid", "__offset")).retaining(ranged)
+      .drop("__pid", "__offset"))
   }
 
   /** Linear quality-classifier scoring over hashed bag-of-words
@@ -607,18 +600,14 @@ object Curation {
     * frequency aggregates the 8-byte line hash after a (doc, hash)
     * distinct, so the shuffle carries hashes, never line text; the
     * boilerplate set (df ≥ threshold) is tiny by construction at any
-    * sane threshold and rides a LEFT ANTI join AQE will broadcast.
-    * Release the persisted line table with
-    * `Df.unpersistIntermediates()` after the terminal action. */
+    * sane threshold and rides a LEFT ANTI join AQE will broadcast. */
   def stripBoilerplateLines(docs: Df, textCol: String, idCol: String,
-                            minDocFreq: Long): Df = {
+                            minDocFreq: Long): Df = Materialize.scope { s =>
     require(minDocFreq >= 2,
       s"stripBoilerplateLines: minDocFreq must be >= 2: $minDocFreq")
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val lines = Materialize.barrier(docs.sdf
+    val lines = s.barrier(docs.sdf
       .select(col(idCol), posexplode(split(col(textCol), "\n")).as(Seq("pos", "line")))
-      .withColumn("lh", hash32(col("line")))
-      .persist(lvl))
+      .withColumn("lh", hash32(col("line"))))
     val boiler = lines.select(col(idCol), col("lh")).distinct()
       .groupBy(col("lh")).agg(count(lit(1)).as("__df"))
       .where(col("__df") >= minDocFreq)
@@ -632,7 +621,7 @@ object Curation {
     val totals = lines.groupBy(col(idCol)).agg(count(lit(1)).as("n_lines"))
     new Df(totals.join(rebuilt, Seq(idCol), "left")
       .withColumn("n_kept", coalesce(col("n_kept"), lit(0L)))
-      .withColumn(textCol, coalesce(col(textCol), lit("")))).retaining(lines)
+      .withColumn(textCol, coalesce(col(textCol), lit(""))))
   }
 
   /** DSIR importance weights (Xie et al. 2023, "Data Selection for
@@ -660,15 +649,12 @@ object Curation {
     * broadcast; scoring is a broadcast join + one per-doc agg. Nothing
     * shuffles tokens twice. Token-less docs drop out (no features). */
   def dsirLogWeights(docs: Df, textCol: String, idCol: String,
-                     targetIsCol: String, buckets: Int = 1 << 16): Df = {
+                     targetIsCol: String, buckets: Int = 1 << 16): Df = Materialize.scope { s =>
     require(buckets >= 1, s"dsirLogWeights: buckets must be >= 1: $buckets")
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val toks = docs.sdf.select(col(idCol),
+    val toks = s.barrier(docs.sdf.select(col(idCol),
         coalesce(col(targetIsCol), lit(false)).as("__tgt"),
         explode(tokens(col(textCol))).as("tok"))
-      .withColumn("bucket", hash32(col("tok")) % buckets)
-      .persist(lvl)
-    Materialize.barrier(toks)
+      .withColumn("bucket", hash32(col("tok")) % buckets))
     val counts = toks.groupBy(col("bucket")).agg(
       sum(when(col("__tgt"), 1L).otherwise(0L)).as("__ct_t"),
       count(lit(1)).as("__ct_r"))
@@ -684,7 +670,6 @@ object Curation {
       .groupBy(col(idCol))
       .agg(count(lit(1)).as("n_tokens"),
         round(sum(col("__lr")).cast("double"), 4).as("log_weight")))
-      .retaining(toks)
   }
 
   /** Corpus snapshot diff — the incremental-pipeline planning step:
@@ -731,13 +716,12 @@ object Curation {
     * bucket rule replays exactly cross-engine. */
   def lengthBucketBatches(docs: Df, textCol: String, idCol: String,
                           nBuckets: Int = 4, batchSize: Int = 32,
-                          shards: Int = 16): Df = {
+                          shards: Int = 16): Df = Materialize.scope { s =>
     require(nBuckets >= 1, s"lengthBucketBatches: nBuckets must be >= 1: $nBuckets")
     require(batchSize >= 1, s"lengthBucketBatches: batchSize must be >= 1: $batchSize")
     require(shards >= 1, s"lengthBucketBatches: shards must be >= 1: $shards")
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val withLen = docs.sdf.select(col(idCol),
-      tokenCount(col(textCol)).cast("long").as("n_tokens")).persist(lvl)
+    val withLen = s.persist(docs.sdf.select(col(idCol),
+      tokenCount(col(textCol)).cast("long").as("n_tokens")))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("bucket"), col("shard"))
       .orderBy(col("n_tokens"), col(idCol))
@@ -757,7 +741,7 @@ object Curation {
       .withColumn("shard", (hash32(col(idCol).cast("string")) % shards).cast("int"))
       .withColumn("__rn", row_number().over(w) - 1)
       .withColumn("batch", expr(s"CAST(__rn div $batchSize AS BIGINT)"))
-      .drop("__rn")).retaining(withLen)
+      .drop("__rn"))
   }
 
   /** Per-group z-score standardization — the feature-normalization
@@ -1077,15 +1061,14 @@ object Curation {
     * corpus-size agg, the anchor side, and the partner lookup); `n`
     * arrives as a broadcast 1-row frame, never a driver action; the
     * partner lookup is ONE equi-join on the 8-byte ordinal. */
-  def negativeSamples(docs: Df, idCol: String, k: Int, seed: Long): Df = {
+  def negativeSamples(docs: Df, idCol: String, k: Int,
+                      seed: Long): Df = Materialize.scope { s =>
     require(k >= 1, s"negativeSamples: k must be >= 1: $k")
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val keyed = new Df(docs.sdf.select(col(idCol))
+    val keyed = s.barrier(new Df(docs.sdf.select(col(idCol))
       .withColumn("__nkey",
         md5(concat_ws(":", lit(seed), col(idCol).cast("string")))))
       .withRowIndexScalable(Seq("__nkey", idCol), "__ord").sdf
-      .select(col(idCol), col("__ord")).persist(lvl)
-    Materialize.barrier(keyed)
+      .select(col(idCol), col("__ord")))
     val n = keyed.agg(count(lit(1)).as("__n"))
     val anchors = keyed.crossJoin(broadcast(n))
       .select(col(idCol).as("anchor_id"), col("__ord"), col("__n"),
@@ -1098,7 +1081,6 @@ object Curation {
     val partners = keyed.select(col("__ord").as("__pord"), col(idCol).as("neg_id"))
     new Df(anchors.join(partners, Seq("__pord"))
       .select(col("anchor_id"), col("neg_rank"), col("neg_id")))
-      .retaining(keyed)
   }
 
   /** Reciprocal-rank fusion (Cormack et al. 2009) — combine several
@@ -1139,14 +1121,12 @@ object Curation {
     * rank order for mixed long/double signals beyond 2^53 follows the
     * widened type — pre-impute/cast upstream if that matters. */
   def rankFusion(df: Df, signalCols: Seq[String], idCol: String,
-                 k: Int = 60): Df = {
+                 k: Int = 60): Df = Materialize.scope { s =>
     require(signalCols.nonEmpty, "rankFusion: need at least one signal")
     require(k >= 1, s"rankFusion: k must be >= 1: $k")
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val base = df.sdf
+    val base = s.persist(df.sdf
       .select(col(idCol) +: signalCols.map(col): _*)
-      .where(signalCols.map(col(_).isNotNull).reduce(_ && _))
-      .persist(lvl)
+      .where(signalCols.map(col(_).isNotNull).reduce(_ && _)))
     val n = base.count() // forces the persist; the melt reads the cache
     val melted = base.select(col(idCol),
       explode(array(signalCols.zipWithIndex.map { case (c, i) =>
@@ -1182,7 +1162,6 @@ object Curation {
     val score = signalCols.map(c => lit(1.0) / (lit(k) + col(s"rank_$c")))
       .reduce(_ + _)
     new Df(checked.withColumn("rrf_score", round(score, 6)))
-      .retaining(base)
   }
 
   /** Deterministic uniform k-per-group sample — the reservoir-sampling

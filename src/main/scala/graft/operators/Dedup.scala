@@ -22,17 +22,8 @@ import org.apache.spark.sql.functions._
   *  - embedding near-dup: cosine restricted to same coarse bucket
   *    (label / LSH), never an unbucketed cross join.
   *
-  * Cache-lifetime contract (one convention for the whole file, shared
-  * by [[Curation.dedupLines]] and [[TextAnalytics.unigramLogLoss]]):
-  * operators that persist multi-referenced intermediates ATTACH them to
-  * the returned [[graft.api.Df]]; the caller that runs the terminal
-  * action releases them with `Df.unpersistIntermediates()` (harnesses
-  * that only hold the bare DataFrame, like graft.Bench/Verify, fall
-  * back to the catch-all `spark.catalog.clearCache()` between queries).
-  * Iterative operators ([[connectedComponents]]) unpersist their
-  * superseded per-round checkpoints internally and attach only the
-  * final one — release of a localCheckpoint is TERMINAL (no lineage
-  * to recompute from), so act on the result before releasing.
+  * Persisted intermediates follow the [[Materialize]] cache-lifetime
+  * contract.
   */
 object Dedup {
 
@@ -57,7 +48,7 @@ object Dedup {
     * references its hashed input k times, and CollapseProject would
     * inline a bare md5 transform into every reference — k md5 passes
     * per shingle. Callers persist this table so the hashes materialize
-    * once (and attach it to their result per the file's contract). */
+    * once. */
   private def shingleTable(docs: Df, textCol: String, idCol: String,
                            shingleN: Int): DataFrame =
     FanOut(docs.sdf)
@@ -78,18 +69,17 @@ object Dedup {
   /** Bucket-size distribution of the MinHash LSH index — run alongside
     * [[minhashPairs]] to audit how much a `maxBucket` cap drops. */
   def lshBucketStats(docs: Df, textCol: String, idCol: String,
-                     shingleN: Int = 3, bands: Int = 3, r: Int = 4): Df = {
+                     shingleN: Int = 3, bands: Int = 3, r: Int = 4): Df = Materialize.scope { s =>
     // persisted even though the DataFrame is referenced once: the
     // EXPRESSION `__hs` is referenced 12× by minhashSignature (and __sig
     // 3× by the band keys), and CollapseProject inlines the md5 work
     // into every reference — up to ~36 hash passes per shingle on an
     // audit meant to scan the full corpus. The persist is the
-    // materialization boundary; released via the file's attach contract.
-    val sh = shingleTable(docs, textCol, idCol, shingleN)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // materialization boundary.
+    val sh = s.persist(shingleTable(docs, textCol, idCol, shingleN))
     new Df(bandedIndex(sh, idCol, bands, r)
       .groupBy(col("__band"), col("__key"))
-      .agg(count(lit(1)).as("bucket_size"))).retaining(sh)
+      .agg(count(lit(1)).as("bucket_size")))
   }
 
   /** MinHash-LSH recall audit — what did the banding + `maxBucket` cap
@@ -116,7 +106,7 @@ object Dedup {
   def lshRecallAudit(docs: Df, textCol: String, idCol: String,
                      sampleFraction: Double, shingleN: Int = 3,
                      bands: Int = 3, r: Int = 4, minJaccard: Double = 0.5,
-                     maxBucket: Int = DefaultMaxBucket): Df = {
+                     maxBucket: Int = DefaultMaxBucket): Df = Materialize.scope { s =>
     requireArgs("lshRecallAudit")(
       (sampleFraction > 0.0 && sampleFraction <= 1.0,
         s"sampleFraction must be a fraction in (0, 1]: $sampleFraction"),
@@ -125,19 +115,18 @@ object Dedup {
       (minJaccard >= 0.0 && minJaccard <= 1.0,
         s"minJaccard must be in [0, 1]: $minJaccard"),
       (maxBucket >= 1, s"maxBucket must be >= 1: $maxBucket"))
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val buckets = 10000
     val sampled = docs.sdf.where(
       hash32(col(idCol).cast("string")) % buckets <
         math.round(sampleFraction * buckets))
-    val sh = shingleTable(new Df(sampled), textCol, idCol, shingleN).persist(lvl)
+    val sh = s.persist(shingleTable(new Df(sampled), textCol, idCol, shingleN))
     // UNCAPPED index: feeds both the cap audit and (through capBuckets)
     // the candidate join — one signature pass, two consumers. The
     // capped index is persisted too: it feeds BOTH candidate self-join
     // sides (the minhashPairs convention), and unpersisted the
     // bucket-count window would run once per side.
-    val bandedAll = bandedIndex(sh, idCol, bands, r).persist(lvl)
-    val banded = capBuckets(bandedAll, maxBucket).persist(lvl)
+    val bandedAll = s.persist(bandedIndex(sh, idCol, bands, r))
+    val banded = s.persist(capBuckets(bandedAll, maxBucket))
     val a = banded.select(col(idCol).as("id_a"), col("__band"), col("__key"))
     val b = banded.select(col(idCol).as("id_b"), col("__band"), col("__key"))
     val candidates = a.join(b, Seq("__band", "__key"))
@@ -166,7 +155,6 @@ object Dedup {
         round(col("lsh_pairs").cast("double") / col("true_pairs"), 6))
         .otherwise(lit(1.0)).as("recall"),
       col("overcap_buckets"), col("rows_in_overcap_buckets")))
-      .retaining(sh, bandedAll, banded)
   }
 
   /** Same-bucket candidate pairs WITHOUT a self-join (r21): one
@@ -357,7 +345,7 @@ object Dedup {
     * over the clamp instead: raise the conf (and its `maxNumBits`
     * sibling) to match the corpus, then pass the honest estimate. */
   def bloomDedupNew(newDocs: Df, corpus: Df, textCol: String, idCol: String,
-                    expectedCorpusItems: Long = 4000000L): Df = {
+                    expectedCorpusItems: Long = 4000000L): Df = Materialize.scope { s =>
     val maxItems = newDocs.spark.conf
       .get("spark.sql.optimizer.runtime.bloomFilter.maxNumItems", "4000000")
       .toLong
@@ -371,38 +359,39 @@ object Dedup {
           "rate would approach 1; raise the conf (and maxNumBits) to the " +
           "corpus size first"))
     graft.plans.GraftFunctions.register(newDocs.spark)
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val outCols = newDocs.sdf.columns.toSeq
     val h = xxhash64(col("__fp"))
-    val newFp = newDocs.sdf
-      .withColumn("__fp", fingerprint(col(textCol))).persist(lvl)
+    val newFp = s.persist(newDocs.sdf
+      .withColumn("__fp", fingerprint(col(textCol))))
     val corpusFp = corpus.sdf.select(fingerprint(col(textCol)).as("__fp"))
     val corpusBloom = corpusFp.agg(bloomAgg(h, expectedCorpusItems).as("b"))
       .head.getAs[Array[Byte]](0)
-    if (corpusBloom == null) // empty corpus: the whole batch is new
-      return new Df(newFp.select(outCols.map(col): _*)).retaining(newFp)
-    val cand = newFp.where(bloomMightContain(corpusBloom, h)).persist(lvl)
-    val definitelyNew = newFp.where(!bloomMightContain(corpusBloom, h))
-    // candidate sketch sized from the ACTUAL candidate count — cand is
-    // already persisted, so the count is one cached scan, and a
-    // corpus-sized buffer per partial task for a handful of hits is
-    // exactly the waste the sizing scaladoc warns about. Above the conf
-    // clamp the sketch just loses selectivity on this secondary prune —
-    // cap rather than refuse (the primary corpus sketch already
-    // fail-fasted above).
-    val candCount = cand.count()
-    val verified =
-      if (candCount == 0) cand.limit(0)
+    val survivors =
+      if (corpusBloom == null) newFp // empty corpus: the whole batch is new
       else {
-        val candBloom = cand
-          .agg(bloomAgg(h, math.min(math.max(candCount, 1L), maxItems)).as("b"))
-          .head.getAs[Array[Byte]](0)
-        cand.join(
-          corpusFp.where(bloomMightContain(candBloom, xxhash64(col("__fp")))),
-          Seq("__fp"), "left_anti")
+        val cand = s.persist(newFp.where(bloomMightContain(corpusBloom, h)))
+        val definitelyNew = newFp.where(!bloomMightContain(corpusBloom, h))
+        // candidate sketch sized from the ACTUAL candidate count — cand
+        // is already persisted, so the count is one cached scan, and a
+        // corpus-sized buffer per partial task for a handful of hits is
+        // exactly the waste the sizing scaladoc warns about. Above the
+        // conf clamp the sketch just loses selectivity on this secondary
+        // prune — cap rather than refuse (the primary corpus sketch
+        // already fail-fasted above).
+        val candCount = cand.count()
+        val verified =
+          if (candCount == 0) cand.limit(0)
+          else {
+            val candBloom = cand
+              .agg(bloomAgg(h, math.min(math.max(candCount, 1L), maxItems)).as("b"))
+              .head.getAs[Array[Byte]](0)
+            cand.join(
+              corpusFp.where(bloomMightContain(candBloom, xxhash64(col("__fp")))),
+              Seq("__fp"), "left_anti")
+          }
+        definitelyNew.unionByName(verified)
       }
-    new Df(definitelyNew.unionByName(verified).select(outCols.map(col): _*))
-      .retaining(newFp, cand)
+    new Df(survivors.select(outCols.map(col): _*))
   }
 
   /** One-pass fixed-size Bloom sketch over a LongType hash column —
@@ -430,7 +419,7 @@ object Dedup {
   def minhashPairs(docs: Df, textCol: String, idCol: String,
                    shingleN: Int = 3, bands: Int = 3, r: Int = 4,
                    minJaccard: Double = 0.5,
-                   maxBucket: Int = DefaultMaxBucket): Df = {
+                   maxBucket: Int = DefaultMaxBucket): Df = Materialize.scope { s =>
     requireArgs("minhashPairs")(
       (shingleN >= 1, s"shingleN must be >= 1: $shingleN"),
       (bands >= 1 && r >= 1, s"bands and r must be >= 1: bands=$bands r=$r"),
@@ -446,14 +435,11 @@ object Dedup {
     // both verification join sides) and Spark plans trees, not DAGs —
     // unpersisted, the tokenize+shingle scan would run once per
     // reference. Materialize it once (the classic "build the LSH index
-    // once" pattern; spilled to disk beyond memory); released via the
-    // file's attach contract (`unpersistIntermediates` after the action).
-    // Barrier like the sibling operators (ADVICE r21): without it the
-    // three consumer subtrees materialize the shingle pipeline
-    // concurrently under AQE before the cache exists.
-    val shingles = Materialize.barrier(
-      shingleTable(docs, textCol, idCol, shingleN)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    // once" pattern; spilled to disk beyond memory). Barrier like the
+    // sibling operators (ADVICE r21): without it the three consumer
+    // subtrees materialize the shingle pipeline concurrently under AQE
+    // before the cache exists.
+    val shingles = s.barrier(shingleTable(docs, textCol, idCol, shingleN))
     // explode to one row per band — candidates collide on (band, key).
     // Only (id, band, key) flows into the bucket aggregation; the
     // shingle arrays are re-joined onto the (much smaller) deduped
@@ -465,7 +451,6 @@ object Dedup {
       .select(col(s"__a.$idCol").as("id_a"), col(s"__b.$idCol").as("id_b"))
       .distinct()
     new Df(verifyJaccard(candidates, shingles, shingles, idCol, minJaccard))
-      .retaining(shingles)
   }
 
   /** Cross-corpus MinHash join — INCREMENTAL dedup: which new docs are
@@ -482,18 +467,15 @@ object Dedup {
   def minhashJoin(corpus: Df, newDocs: Df, textCol: String, idCol: String,
                   shingleN: Int = 3, bands: Int = 3, r: Int = 4,
                   minJaccard: Double = 0.5,
-                  maxBucket: Int = DefaultMaxBucket): Df = {
+                  maxBucket: Int = DefaultMaxBucket): Df = Materialize.scope { s =>
     requireArgs("minhashJoin")(
       (shingleN >= 1, s"shingleN must be >= 1: $shingleN"),
       (bands >= 1 && r >= 1, s"bands and r must be >= 1: bands=$bands r=$r"),
       (minJaccard >= 0.0 && minJaccard <= 1.0,
         s"minJaccard must be in [0, 1]: $minJaccard"),
       (maxBucket >= 1, s"maxBucket must be >= 1: $maxBucket"))
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val shA = Materialize.barrier(
-      shingleTable(corpus, textCol, idCol, shingleN).persist(lvl))
-    val shB = Materialize.barrier(
-      shingleTable(newDocs, textCol, idCol, shingleN).persist(lvl))
+    val shA = s.barrier(shingleTable(corpus, textCol, idCol, shingleN))
+    val shB = s.barrier(shingleTable(newDocs, textCol, idCol, shingleN))
     val bA = capBuckets(bandedIndex(shA, idCol, bands, r), maxBucket)
     val bB = capBuckets(bandedIndex(shB, idCol, bands, r), maxBucket)
     val candidates = bA.select(col(idCol).as("id_a"), col("__band"), col("__key"))
@@ -501,7 +483,6 @@ object Dedup {
         Seq("__band", "__key"))
       .select("id_a", "id_b").distinct()
     new Df(verifyJaccard(candidates, shA, shB, idCol, minJaccard))
-      .retaining(shA, shB)
   }
 
   /** 60-bit SimHash per document: bit i of the signature is the sign of
@@ -578,7 +559,7 @@ object Dedup {
     * so only overlapping pairs are ever materialized. */
   def ngramJaccardPairs(docs: Df, textCol: String, idCol: String,
                         n: Int = 3, minJaccard: Double = 0.5,
-                        maxBucket: Int = DefaultMaxBucket): Df = {
+                        maxBucket: Int = DefaultMaxBucket): Df = Materialize.scope { s =>
     requireArgs("ngramJaccardPairs")(
       (n >= 1, s"n must be >= 1: $n"),
       (minJaccard >= 0.0 && minJaccard <= 1.0,
@@ -595,10 +576,9 @@ object Dedup {
     //     while staying EXACT (verification uses the full sets).
     // materialized once: referenced by both self-join sides AND the
     // verification lookups (4 uses; Spark plans trees, not DAGs)
-    val sh = Materialize.barrier(FanOut(docs.sdf).select(col(idCol).as("id"),
+    val sh = s.barrier(FanOut(docs.sdf).select(col(idCol).as("id"),
       array_sort(array_distinct(transform(wordShingles(col(textCol), n), hash32(_)))).as("sh"))
-      .withColumn("nsh", size(col("sh")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+      .withColumn("nsh", size(col("sh"))))
     // ε guards the FP product before ceil: e.g. 0.07·100 evaluates to
     // 7.000000000000001 and an unguarded ceil gives 8, shortening the
     // prefix by one and silently MISSING qualifying pairs — breaking
@@ -638,7 +618,7 @@ object Dedup {
     new Df(pairs
       .withColumn("jaccard", round(expr("graft_jaccard_sorted(sh_a, sh_b)"), 6))
       .where(col("jaccard") >= minJaccard)
-      .select("id_a", "id_b", "jaccard")).retaining(sh)
+      .select("id_a", "id_b", "jaccard"))
   }
 
   /** Embedding near-dup pairs for UNLABELED corpora: the coarse block
@@ -736,11 +716,9 @@ object Dedup {
     * the NEXT one materializes (the eager `localCheckpoint` return —
     * nothing references the superseded blocks after that), so the loop
     * holds at most two |V|-row checkpoints at any moment. The FINAL
-    * checkpoint backs the returned labels and is attached via
-    * `retaining` — the standard file contract: the caller that runs the
-    * terminal action releases it with `unpersistIntermediates()` (or the
-    * `Df.releaseRetained()` fallback). NOTE a released localCheckpoint
-    * cannot recompute — release is terminal; act on the result first.
+    * checkpoint backs the returned labels. NOTE a released
+    * localCheckpoint cannot recompute — release is terminal; act on the
+    * result first.
     *
     * Output: (`idCol`, cluster) for every node that appears in `pairs`;
     * docs with no near-dup pair are their own singleton cluster and are
@@ -754,22 +732,21 @@ object Dedup {
     * the fast path unconditionally. */
   def connectedComponents(pairs: Df, aCol: String, bCol: String,
                           maxIter: Int = 20,
-                          broadcastMaxNodes: Long = 250000): Df = {
+                          broadcastMaxNodes: Long = 250000): Df = Materialize.scope { s =>
     requireArgs("connectedComponents")(
       (maxIter >= 1, s"maxIter must be >= 1: $maxIter"),
       (broadcastMaxNodes >= 0,
         s"broadcastMaxNodes must be >= 0: $broadcastMaxNodes"))
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     // symmetrize in ONE pass: the union-of-reverse formulation evaluates
     // the caller's pair pipeline once per union arm (candidate join +
     // verification, twice — r21 profile), while an in-row explode of
     // [(src,dst),(dst,src)] reads it once for the same edge set
-    val edges0 = pairs.sdf
+    val edges0 = s.persist(pairs.sdf
       .select(explode(array(
         struct(col(aCol).as("src"), col(bCol).as("dst")),
         struct(col(bCol).as("src"), col(aCol).as("dst")))).as("__e"))
       .select(col("__e.src").as("src"), col("__e.dst").as("dst"))
-      .distinct().persist(lvl)
+      .distinct())
     // ROUND-1 FUSED INTO INITIALIZATION (r21): the node derivation was a
     // distinct() over edges0 — the same src-keyed aggregate as a min(dst)
     // pass, so computing min(own id, min neighbor id) here costs NOTHING
@@ -779,10 +756,9 @@ object Dedup {
     // least(src, min(dst)) IS the round-1 label exactly — labels start
     // one propagation ahead; dense clique-like near-dup graphs are
     // CONVERGED at init and pay only the single verification round).
-    var labels = edges0.groupBy(col("src").as("id"))
+    var labels = s.checkpoint(edges0.groupBy(col("src").as("id"))
       .agg(min(col("dst")).as("__nm"))
-      .select(col("id"), least(col("id"), col("__nm")).as("cluster"))
-      .localCheckpoint()
+      .select(col("id"), least(col("id"), col("__nm")).as("cluster")))
     // |V| is already materialized (the checkpoint above) — counting it is
     // an O(partitions) action over cached blocks. When the label table is
     // vocabulary-sized, every per-round labels-side join takes an explicit
@@ -797,14 +773,7 @@ object Dedup {
     // short-circuit: broadcastMaxNodes = 0 explicitly requests the pure
     // shuffle path (the q269 forced-path contract, gate-flip fuzz) — do
     // not pay a driver count() action just to compare against 0.
-    // a failed gate action must release the persisted edges AND the
-    // eagerly-materialized labels checkpoint (|V| rows), not leak either
-    // for the session (same failure-path contract as bpeMerges; the
-    // residual-failure path below already releases its checkpoint)
-    val bcastLabels =
-      try broadcastMaxNodes > 0 && labels.count() <= broadcastMaxNodes
-      catch { case t: Throwable =>
-        Df.unpersistAny(labels); edges0.unpersist(); throw t }
+    val bcastLabels = broadcastMaxNodes > 0 && labels.count() <= broadcastMaxNodes
     def hint(d: DataFrame): DataFrame = if (bcastLabels) broadcast(d) else d
     // shuffle mode only: re-layout the persisted edges by dst ONCE (the
     // pageRank move). distinct() leaves (src,dst) hash partitioning,
@@ -820,16 +789,8 @@ object Dedup {
     val edges =
       if (bcastLabels) edges0
       else {
-        val byDst = edges0.repartition(col("dst")).persist(lvl)
-        try byDst.count()
-        catch { case t: Throwable =>
-          // release BOTH edge copies AND the labels checkpoint on a
-          // failed re-layout — otherwise 2x|E| + |V| rows of dead
-          // MEMORY_AND_DISK blocks outlive the exception
-          Df.unpersistAny(labels); byDst.unpersist(); edges0.unpersist()
-          throw t
-        }
-        edges0.unpersist()
+        val byDst = s.barrier(edges0.repartition(col("dst")))
+        s.release(edges0)
         byDst
       }
     // the checkpointed frame backing the CURRENT labels — unpersisted the
@@ -868,11 +829,9 @@ object Dedup {
               coalesce(col("ll"), col("cluster")),
               coalesce(col("nbr_min"), col("cluster"))).as("next"))
       }
-      val updated = withCands
-        .localCheckpoint() // eager: materialized when this returns...
-      // ...so the superseded round is unreferenced (RDD-level release:
-      // Dataset.unpersist cannot touch checkpoint blocks)
-      Df.unpersistAny(prevCkpt)
+      val updated = s.checkpoint(withCands) // eager: materialized when this returns...
+      // ...so the superseded round is unreferenced
+      s.release(prevCkpt)
       prevCkpt = updated
       changed = updated.where(col("next") < col("cluster")).count()
       // no second checkpoint: labels is a depth-1 projection over the
@@ -895,21 +854,18 @@ object Dedup {
         .groupBy(col("src").as("id")).agg(min(col("nl")).as("nbr_min"))
         .join(hint(labels), Seq("id"))
         .where(col("nbr_min") < col("cluster")).count()
-      if (residual > 0) {
-        edges.unpersist()
-        Df.unpersistAny(prevCkpt) // nothing useful survives a failed run
-        // fail loudly: labels from a stopped-early run are INCONSISTENT
-        // (one component, several cluster ids) and downstream dedup
-        // would silently keep duplicates
+      // fail loudly: labels from a stopped-early run are INCONSISTENT
+      // (one component, several cluster ids) and downstream dedup would
+      // silently keep duplicates; the scope releases what it holds
+      if (residual > 0)
         throw new IllegalStateException(
           s"connectedComponents: not converged after ${maxIter + 1} rounds " +
             s"(the fused init round + $maxIter loop rounds; $residual labels " +
             "still pending) — raise maxIter (rounds needed grow with log2 " +
             "of the largest component's diameter)")
-      }
     }
-    edges.unpersist()
-    new Df(labels).retaining(prevCkpt)
+    s.release(edges)
+    new Df(labels)
   }
 
   /** Incremental connected components — the dedup endgame's BATCH
@@ -938,7 +894,7 @@ object Dedup {
     * label-propagation rounds; convergence is bounded by the diameter
     * of the NEW merge structure, not history. Same per-round contract
     * as [[connectedComponents]]: one shuffle, checkpoint rotation,
-    * final checkpoint attached for release. */
+    * final checkpoint attached to the result. */
   def incrementalComponents(oldLabels: Df, newPairs: Df,
                             aCol: String = "id_a", bCol: String = "id_b",
                             maxIter: Int = 20,
@@ -1118,14 +1074,13 @@ object Dedup {
     * mark a non-duplicated window as duplicated (the conservative
     * direction for a cleaning signal); oracles replay the hash. */
   def duplicatedWindows(docs: Df, textCol: String, idCol: String,
-                        k: Int = 50): Df = {
+                        k: Int = 50): Df = Materialize.scope { s =>
     require(k >= 1, s"duplicatedWindows: window size k must be >= 1: $k")
     // referenced twice (window pipeline + per-doc totals): materialize
-    // the tokenize+hash pass once; released via the file's attach contract
-    val base = Materialize.barrier(docs.sdf.select(col(idCol),
+    // the tokenize+hash pass once
+    val base = s.barrier(docs.sdf.select(col(idCol),
       tokenCount(col(textCol)).cast("long").as("n_tokens"),
-      transform(wordGramsAll(col(textCol), k), g => hash32(g)).as("__whs"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+      transform(wordGramsAll(col(textCol), k), g => hash32(g)).as("__whs")))
     val wins = base.select(col(idCol), posexplode(col("__whs")).as(Seq("start", "wh")))
     val dup = wins.groupBy(col("wh")).agg(count(lit(1)).as("__ct"))
       .where(col("__ct") > 1).select("wh")
@@ -1145,7 +1100,6 @@ object Dedup {
         coalesce(col("n_dup_windows"), lit(0L)).as("n_dup_windows"),
         round(coalesce(col("__covered"), lit(0L)).cast("double") /
           greatest(col("n_tokens"), lit(1L)), 6).as("dup_token_fraction")))
-      .retaining(base)
   }
 
   /** Duplicated-window REMOVAL (the Lee-et-al substring-dedup rewrite,
@@ -1181,14 +1135,13 @@ object Dedup {
     * GUARANTEE a dup-free corpus on adversarial input — FuzzSpec checks
     * the property on random corpora; iterate to fixpoint if required. */
   def removeDuplicatedWindows(docs: Df, textCol: String, idCol: String,
-                              k: Int = 50): Df = {
+                              k: Int = 50): Df = Materialize.scope { s =>
     require(k >= 1, s"removeDuplicatedWindows: window size k must be >= 1: $k")
     // referenced twice (window pipeline + final rebuild): materialize
-    // the tokenize+hash pass once; released via the file's attach contract
-    val base = Materialize.barrier(docs.sdf.select(col(idCol),
+    // the tokenize+hash pass once
+    val base = s.barrier(docs.sdf.select(col(idCol),
       tokens(col(textCol)).as("__toks"),
-      transform(wordGramsAll(col(textCol), k), g => hash32(g)).as("__whs"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+      transform(wordGramsAll(col(textCol), k), g => hash32(g)).as("__whs")))
     val wins = base.select(col(idCol), posexplode(col("__whs")).as(Seq("start", "wh")))
     val firsts = wins.groupBy(col("wh"))
       .agg(min(struct(col(idCol), col("start"))).as("__first"))
@@ -1225,7 +1178,6 @@ object Dedup {
           .otherwise(cleaned).as(textCol),
         n.cast("long").as("n_tokens"),
         coalesce(col("n_tokens_removed"), lit(0L)).as("n_tokens_removed")))
-      .retaining(base)
   }
 
   /** Embedding-cosine near-dup pairs, blocked by a coarse bucket column

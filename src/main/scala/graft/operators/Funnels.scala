@@ -29,35 +29,33 @@ object Funnels {
     * on the SAME user key, so the exchanges line up and AQE reuses the
     * partitioning; cohort frames persist AND materialize eagerly
     * because each feeds both its own count and the next join (see
-    * Materialize.barrier). The final counts union then reads only
+    * [[Materialize]]). The final counts union then reads only
     * cached cohort frames. */
   def funnel(events: DataFrame, userCol: String, tsCol: String,
-             typeCol: String, steps: Seq[String], withinSec: Long): Df = {
+             typeCol: String, steps: Seq[String],
+             withinSec: Long): Df = Materialize.scope { s =>
     require(steps.size >= 2, s"funnel: need >= 2 steps: $steps")
     require(steps.distinct.size == steps.size,
       s"funnel: duplicate step in $steps")
     require(withinSec > 0, s"funnel: withinSec must be > 0: $withinSec")
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val e = events.select(col(userCol).as("__u"),
       col(tsCol).cast("timestamp").as("__ts"), col(typeCol).as("__t"))
-    // each cohort frame is barriered (Materialize.barrier): it feeds
-    // BOTH its own count and the next step's join (u1 additionally the
-    // conversion base) — unbarriered, the one-job funnel evaluated
-    // every frame once per consumer (u1 three times)
-    val u1 = Materialize.barrier(e.where(col("__t") === steps.head)
+    // each cohort frame is barriered: it feeds BOTH its own count and
+    // the next step's join (u1 additionally the conversion base) —
+    // unbarriered, the one-job funnel evaluated every frame once per
+    // consumer (u1 three times)
+    val u1 = s.barrier(e.where(col("__t") === steps.head)
       .groupBy(col("__u")).agg(min(col("__ts")).as("__cur"))
-      .withColumn("__t1", col("__cur")).persist(lvl))
+      .withColumn("__t1", col("__cur")))
     val frames = scala.collection.mutable.ArrayBuffer(u1)
-    for (s <- steps.tail) {
+    for (st <- steps.tail) {
       val prev = frames.last
-      val next = Materialize.barrier(e.where(col("__t") === s)
+      frames += s.barrier(e.where(col("__t") === st)
         .join(prev.select(col("__u"), col("__cur").as("__pv"), col("__t1")),
           Seq("__u"))
         .where(col("__ts") >= col("__pv") &&
           col("__ts") <= col("__t1") + expr(s"INTERVAL $withinSec SECONDS"))
-        .groupBy(col("__u"), col("__t1")).agg(min(col("__ts")).as("__cur"))
-        .persist(lvl))
-      frames += next
+        .groupBy(col("__u"), col("__t1")).agg(min(col("__ts")).as("__cur")))
     }
     val counts = frames.toSeq.zip(steps).zipWithIndex.map {
       case ((f, name), i) =>
@@ -70,6 +68,5 @@ object Funnels {
       .withColumn("conversion", when(col("__n1") > 0,
         round(col("n_users").cast("double") / col("__n1"), 4)))
       .drop("__n1"))
-      .retaining(frames.toSeq: _*)
   }
 }

@@ -68,28 +68,27 @@ object Graphs {
     * the fast path unconditionally. */
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
                iterations: Int = 5, damping: Double = 0.85,
-               broadcastMaxNodes: Long = 250000): Df = {
+               broadcastMaxNodes: Long = 250000): Df = Materialize.scope { s =>
     require(iterations >= 1, s"pageRank: iterations must be >= 1: $iterations")
     require(damping > 0 && damping < 1,
       s"pageRank: damping must be in (0, 1): $damping")
     require(broadcastMaxNodes >= 0,
       s"pageRank: broadcastMaxNodes must be >= 0: $broadcastMaxNodes")
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val e = edges.select(col(srcCol).as("__src"), col(dstCol).as("__dst"))
       .where(col("__src").isNotNull && col("__dst").isNotNull)
     val w = e.groupBy(col("__src"), col("__dst")).agg(count(lit(1)).as("__w"))
     val outW = w.groupBy(col("__src")).agg(sum(col("__w")).as("__ow"))
-    val eNorm = w.join(outW, Seq("__src"))
+    val eNorm = s.persist(w.join(outW, Seq("__src"))
       .select(col("__src"), col("__dst"),
         (col("__w").cast("double") / col("__ow")).as("__frac"))
-      .repartition(col("__src")).persist(lvl)
+      .repartition(col("__src")))
     // nodes from the PERSISTED eNorm (src ∪ dst survive the weight
     // aggregation unchanged), via one in-row explode — r22: the old
     // union-of-two-selects over `e` re-ran the caller's whole edge
     // pipeline once per union arm, and the count() below now doubles as
     // the eNorm cache barrier (one upstream pass materializes both).
-    val nodes = eNorm.select(explode(array(col("__src"), col("__dst")))
-      .as("node")).distinct().persist(lvl)
+    val nodes = s.persist(eNorm
+      .select(explode(array(col("__src"), col("__dst"))).as("node")).distinct())
     val n = nodes.count()
     val teleport = (1 - damping) / n
     // same 0-disables contract as the other two scale gates (USAGE.md
@@ -148,9 +147,8 @@ object Graphs {
     for (i <- 1 to iterations) {
       contrib = Some(contribStep(contrib))
       if (i % chainDepth == 0 && i < iterations) {
-        val cut = contrib.get.persist(lvl)
-        cut.count()
-        prevCut.foreach(_.unpersist())
+        val cut = s.barrier(contrib.get)
+        prevCut.foreach(s.release)
         prevCut = Some(cut)
         contrib = Some(cut)
       }
@@ -165,7 +163,7 @@ object Graphs {
       // below the gate the whole ≤chainDepth-step recurrence is one
       // cheap broadcast-join plan; lazy return lets a single-action
       // caller pay exactly one job and Bench time the real plan.
-      new Df(result).retaining((eNorm :: nodes :: prevCut.toList): _*)
+      new Df(result)
     } else {
       // above the gate a lazy return would make EVERY caller action
       // recompute up to chainDepth shuffle iterations (rank exchange +
@@ -173,13 +171,9 @@ object Graphs {
       // returned a materialized table and multi-action consumers relied
       // on it (ADVICE r18). One |V|-row persist+count here restores
       // that contract; the superseded cut is then dead and released.
-      val fin = result.persist(lvl)
-      try fin.count()
-      catch { case t: Throwable =>
-        fin.unpersist(); eNorm.unpersist(); nodes.unpersist()
-        prevCut.foreach(_.unpersist()); throw t }
-      prevCut.foreach(_.unpersist())
-      new Df(fin).retaining(eNorm, nodes, fin)
+      val fin = s.barrier(result)
+      prevCut.foreach(s.release)
+      new Df(fin)
     }
   }
 

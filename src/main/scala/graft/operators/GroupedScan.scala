@@ -146,7 +146,7 @@ object GroupedScan {
   def scan(df: DataFrame, groupKeys: Seq[String],
            orderKeys: Seq[(String, Boolean)], verbs: Seq[Verb],
            numPartitions: Int = 0,
-           persistSorted: Option[Boolean] = None): DataFrame = {
+           persistSorted: Option[Boolean] = None): DataFrame = Materialize.scope { s =>
     require(orderKeys.nonEmpty, "scan: orderKeys required")
     require(verbs.nonEmpty, "scan: at least one verb")
     val in = df.schema
@@ -231,14 +231,7 @@ object GroupedScan {
       val sz = df.queryExecution.optimizedPlan.stats.sizeInBytes
       sz < BigInt(Long.MaxValue) / 2 && sz >= thresh
     }
-    val rdd = {
-      if (persistOn) {
-        val p = ranged.persist(
-          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        graft.api.Df.retainFrame(p)
-        p.rdd
-      } else ranged.rdd
-    }
+    val rdd = if (persistOn) s.persist(ranged).rdd else ranged.rdd
     val nKernels = kernels.length
 
     // ---- pass 1: per-partition state of the LAST group ----

@@ -120,14 +120,13 @@ object Quality {
     * expressions), then explode → aggregate keyed by (doc, gram) /
     * (doc, window-hash) for the n-gram family — high-cardinality keys,
     * partial aggregation applies, no global windows. The token table
-    * is persisted once and shared by all three subtrees (attached via
-    * the cache contract — the terminal-action owner releases it). */
+    * is persisted once and shared by all three subtrees. */
   def gopherRepetitionStats(docs: Df, textCol: String, idCol: String,
                             topN: Int = 2, dupN: Int = 5,
                             maxDupLineFraction: Double = 0.30,
                             maxDupLineCharFraction: Double = 0.20,
                             maxTopNgramCharFraction: Double = 0.20,
-                            maxDupNgramCharFraction: Double = 0.15): Df = {
+                            maxDupNgramCharFraction: Double = 0.15): Df = Materialize.scope { s =>
     requireArgs("gopherRepetitionStats")(
       (topN >= 1, s"topN must be >= 1: $topN"),
       (dupN >= 1, s"dupN must be >= 1: $dupN"))
@@ -139,10 +138,9 @@ object Quality {
     // ran single-task over the cache (r22 stage profile, q145: two ~0.9 s 1-task
     // stages while 32 cores idled); a planning no-op once the scan has
     // real row-group parallelism (guide §2.5).
-    val tokTab = Materialize.barrier(FanOut(docs.sdf)
+    val tokTab = s.barrier(FanOut(docs.sdf)
       .select(col(idCol).as("__id"),
-        tokens(col(textCol)).as("__toks"), split(col(textCol), "\n").as("__lines"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        tokens(col(textCol)).as("__toks"), split(col(textCol), "\n").as("__lines")))
 
     val toks = col("__toks")
     val lines = col("__lines")
@@ -210,7 +208,7 @@ object Quality {
       col("dup_line_fraction"), col("dup_line_char_fraction"),
       topFrac.as("top_ngram_char_fraction"),
       dupFrac.as("dup_ngram_char_fraction"),
-      keep.as("keep"))).retaining(tokTab)
+      keep.as("keep")))
   }
 
   /** shared signal battery: (named signal columns, keep verdict) */

@@ -318,7 +318,7 @@ object Similarity {
     * nprobe/nlist of the data. */
   def searchIvfIndex(queries: Df, vecCol: String, idCol: String,
                      path: String, k: Int, nprobe: Int = 4,
-                     excludeSelf: Boolean = true): Df = {
+                     excludeSelf: Boolean = true): Df = Materialize.scope { s =>
     require(k >= 1, s"searchIvfIndex: k must be >= 1: $k")
     require(nprobe >= 1, s"searchIvfIndex: nprobe must be >= 1: $nprobe")
     val spark = queries.spark
@@ -352,12 +352,11 @@ object Similarity {
         .toLowerCase.contains("dynamicpruning"))
       new Df(joined)
     else {
-      val qq = q.persist()
+      val qq = s.persist(q)
       val probed = qq.select("cell").distinct().collect().map(_.getInt(0))
       val cf = FooterSchema.read(spark, s"$path/index")
         .where(col("cell").isin(probed.map(Int.box).toIndexedSeq: _*))
       new Df(rerankTopK(cf.join(broadcast(qq), Seq("cell")), k, excludeSelf))
-        .retaining(qq)
     }
   }
 
@@ -599,13 +598,11 @@ object Similarity {
     * pure codegen'd projection pass, no shuffle (the explode to long
     * format is ×m, for the relational output shape only). */
   def pqEncode(vecs: Df, vecCol: String, idCol: String,
-               m: Int = 2, codes: Int = 4, iters: Int = 2): Df = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val corpus = vecs.sdf
+               m: Int = 2, codes: Int = 4, iters: Int = 2): Df = Materialize.scope { s =>
+    val corpus = s.persist(vecs.sdf
       .select(col(idCol).as("__id"),
         transform(col(vecCol), _.cast("double")).as("__v"))
-      .where(fullyFinite(col("__v")))
-      .persist(lvl)
+      .where(fullyFinite(col("__v"))))
     val (dim, books) = pqTrain(corpus, m, codes, iters)
     val sd = dim / m
     val pairs = (0 until m).map { j =>
@@ -616,7 +613,6 @@ object Similarity {
       .select(col("__id").as(idCol), explode(array(pairs: _*)).as("sc"))
       .select(col(idCol), col("sc.subspace").as("subspace"),
         col("sc.code").as("code")))
-      .retaining(corpus)
   }
 
   /** PQ asymmetric-distance (ADC) top-k: the corpus is scanned as
@@ -633,14 +629,12 @@ object Similarity {
     * as [[pqEncode]]. */
   def pqTopK(queries: Df, corpus: Df, vecCol: String, idCol: String,
              k: Int, m: Int = 2, codes: Int = 4, iters: Int = 2,
-             excludeSelf: Boolean = true): Df = {
+             excludeSelf: Boolean = true): Df = Materialize.scope { s =>
     require(k >= 1, s"pqTopK: k must be >= 1: $k")
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val corpusD = corpus.sdf
+    val corpusD = s.persist(corpus.sdf
       .select(col(idCol).as("__id"),
         transform(col(vecCol), _.cast("double")).as("__v"))
-      .where(fullyFinite(col("__v")))
-      .persist(lvl)
+      .where(fullyFinite(col("__v"))))
     val (dim, books) = pqTrain(corpusD, m, codes, iters)
     val sd = dim / m
     val coded = corpusD.select(
@@ -675,19 +669,16 @@ object Similarity {
       .withColumn("rank", row_number().over(w))
       .where(col("rank") <= k)
       .select("query_id", "rank", "corpus_id", "approx_d2"))
-      .retaining(corpusD)
   }
 
   def kMeans(vecs: Df, vecCol: String, idCol: String,
-             k: Int, iters: Int): Df = {
+             k: Int, iters: Int): Df = Materialize.scope { s =>
     require(k >= 1, s"kMeans: k must be >= 1: $k")
     require(iters >= 1, s"kMeans: iters must be >= 1: $iters")
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val corpus = vecs.sdf
+    val corpus = s.persist(vecs.sdf
       .select(col(idCol).as("__id"),
         transform(col(vecCol), _.cast("double")).as("__v"))
-      .where(fullyFinite(col("__v")))
-      .persist(lvl)
+      .where(fullyFinite(col("__v"))))
     val init = corpus.sort("__id").limit(k).collect()
       .map(_.getSeq[Double](1).toArray)
     require(init.nonEmpty,
@@ -716,7 +707,6 @@ object Similarity {
       assigned = assign(centers)
     }
     new Df(assigned.select(col("__id").as(idCol), col("cluster")))
-      .retaining(corpus)
   }
 
   /** Population covariance matrix of an embedding column, upper

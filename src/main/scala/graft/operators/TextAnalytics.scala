@@ -103,23 +103,19 @@ object TextAnalytics {
     * join; an earlier version re-shingled the corpus for the totals
     * and doubled the dominant cost); the benchmark's distinct gram
     * set rides an equi-join AQE broadcasts; the join back onto the
-    * corpus is id-keyed. Release the persisted shingle table with
-    * `Df.unpersistIntermediates()` after the terminal action. */
+    * corpus is id-keyed. */
   def decontaminate(corpus: Df, benchmark: Df, textCol: String,
                     idCol: String, n: Int = 3,
-                    maxFraction: Double = 0.0): Df = {
+                    maxFraction: Double = 0.0): Df = Materialize.scope { s =>
     require(n >= 1, s"decontaminate: n must be >= 1: $n")
     require(maxFraction >= 0.0 && maxFraction <= 1.0,
       s"decontaminate: maxFraction must be in [0, 1]: $maxFraction")
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val bench = benchmark.sdf
       .select(explode(wordShingles(col(textCol), n)).as("g"))
       .select(hash32(col("g")).as("gh")).distinct()
-    val docShingles = FanOut(corpus.sdf).select(col(idCol),
+    val docShingles = s.barrier(FanOut(corpus.sdf).select(col(idCol),
         explode(wordShingles(col(textCol), n)).as("g"))
-      .select(col(idCol), hash32(col("g")).as("gh"))
-      .persist(lvl)
-    Materialize.barrier(docShingles)
+      .select(col(idCol), hash32(col("g")).as("gh")))
     val totals = docShingles.groupBy(col(idCol))
       .agg(count(lit(1)).as("__n_grams"))
     val hits = docShingles.join(bench, Seq("gh"))
@@ -131,7 +127,7 @@ object TextAnalytics {
         round(coalesce(col("__n_cont"), lit(0L)).cast("double") /
           greatest(coalesce(col("__n_grams"), lit(0L)), lit(1L)), 6))
       .where(col("contaminated_fraction") <= maxFraction)
-      .drop("__n_grams", "__n_cont")).retaining(docShingles)
+      .drop("__n_grams", "__n_cont"))
   }
 
   /** Per-document n-gram repetition statistics — the Gopher/RefinedWeb
@@ -166,38 +162,32 @@ object TextAnalytics {
     *
     * The token table is persisted: it is referenced three times (model
     * counts, total, and the scoring join) and Spark plans trees —
-    * unpersisted, the corpus would be re-tokenized per reference. It is
-    * attached to the result; release with `Df.unpersistIntermediates()`
-    * after the terminal action (the [[graft.operators.Dedup]]
-    * cache-lifetime convention). Each ln term is cast to DECIMAL(18,8)
+    * unpersisted, the corpus would be re-tokenized per reference. Each
+    * ln term is cast to DECIMAL(18,8)
     * before summing so the per-doc sum is order-independent (double
     * addition is not). */
-  def unigramLogLoss(docs: Df, textCol: String, idCol: String): Df = {
-    val (scored, toks) = unigramNllCore(docs, textCol, idCol)
-    new Df(scored).retaining(toks)
-  }
+  def unigramLogLoss(docs: Df, textCol: String, idCol: String): Df =
+    Materialize.scope(s => new Df(unigramNllCore(s, docs, textCol, idCol)))
 
-  /** shared NLL core: (per-doc avg_nll frame, the persisted token
-    * table the caller must attach via `retaining`) */
-  private def unigramNllCore(docs: Df, textCol: String, idCol: String)
-      : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
+  /** shared NLL core: the per-doc avg_nll frame over a token table
+    * barriered in the caller's scope */
+  private def unigramNllCore(s: Materialize.Scope, docs: Df, textCol: String,
+                             idCol: String): org.apache.spark.sql.DataFrame = {
     // FanOut like the sibling shingle/ngram paths (r22): the tokenize
     // explode AND every downstream read of the persisted token table
     // otherwise run at the raw scan's partition count (r22 stage profile, q152:
     // the barrier count and the freq/scored aggregates all single-task
     // on a one-row-group corpus file while 32 cores idled; guide §2.5)
-    val toks = Materialize.barrier(
-      FanOut(docs.sdf).select(col(idCol), explode(tokens(col(textCol))).as("t"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val toks = s.barrier(
+      FanOut(docs.sdf).select(col(idCol), explode(tokens(col(textCol))).as("t")))
     val freq = toks.groupBy(col("t")).agg(count(lit(1)).as("ct"))
     val total = toks.agg(count(lit(1)).as("total"))
-    val scored = toks.join(freq, Seq("t")).crossJoin(broadcast(total))
+    toks.join(freq, Seq("t")).crossJoin(broadcast(total))
       .withColumn("nll",
         (-log(col("ct").cast("double") / col("total"))).cast("decimal(18,8)"))
       .groupBy(col(idCol))
       .agg(round(sum(col("nll")).cast("double") / count(lit(1)), 4).as("avg_nll"),
         count(lit(1)).as("n_tokens"))
-    (scored, toks)
   }
 
   /** CCNet-style perplexity bucketing (Wenzek et al. 2020): score each
@@ -225,16 +215,15 @@ object TextAnalytics {
   def perplexityBuckets(docs: Df, textCol: String, idCol: String,
                         groupCol: String,
                         lowCut: Double = 1.0 / 3, highCut: Double = 2.0 / 3,
-                        exact: Boolean = true): Df = {
+                        exact: Boolean = true): Df = Materialize.scope { s =>
     require(lowCut > 0 && lowCut <= highCut && highCut < 1,
       s"need 0 < lowCut <= highCut < 1: $lowCut, $highCut")
-    val (nll, toks) = unigramNllCore(docs, textCol, idCol)
+    val nll = unigramNllCore(s, docs, textCol, idCol)
     // persisted: the NLL lineage (tokenize + vocab join) feeds the two
     // selection jobs AND the final bucket pass — three narrow columns,
-    // computed once; released through the Df cache-lifetime contract
-    val scored = nll
-      .join(docs.sdf.select(col(idCol), col(groupCol)), Seq(idCol))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // computed once
+    val scored = s.persist(nll
+      .join(docs.sdf.select(col(idCol), col(groupCol)), Seq(idCol)))
     val spark = docs.sdf.sparkSession
     val cuts =
       if (exact) {
@@ -274,7 +263,7 @@ object TextAnalytics {
           .when(col("avg_nll") <= col("__t2"), "middle")
           .otherwise("tail"))
       .drop("__t1", "__t2")
-    new Df(out).retaining(toks, scored)
+    new Df(out)
   }
 
   /** Top-k TF-IDF terms per document (the "document keywords" shape) —
@@ -367,13 +356,12 @@ object TextAnalytics {
     * measured state size, identical results either side, 0 disables
     * the fast path unconditionally. */
   def bpeMerges(docs: Df, textCol: String, nMerges: Int,
-                driverMaxVocab: Long = 1000000): Df = {
+                driverMaxVocab: Long = 1000000): Df = Materialize.scope { s =>
     require(nMerges >= 1 && nMerges <= 1000,
       s"bpeMerges: nMerges must be in [1, 1000]: $nMerges")
     require(driverMaxVocab >= 0,
       s"bpeMerges: driverMaxVocab must be >= 0: $driverMaxVocab")
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val vocab0 = docs.sdf
+    val vocab0 = s.persist(docs.sdf
       .select(explode(tokens(col(textCol))).as("word"))
       .where(col("word").rlike("^[A-Za-z0-9]+$"))
       .groupBy("word").agg(count(lit(1)).as("wf"))
@@ -382,25 +370,19 @@ object TextAnalytics {
       // bare (?!^) would append an empty symbol to every word
       .select(concat(lit("|"),
         concat_ws("||", split(col("word"), "(?!^)(?!$)")), lit("|")).as("seq"),
-        col("wf"))
-      .persist(lvl)
+        col("wf")))
     val merges = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.Row]
     // gate short-circuits on 0 (the q271 forced-shuffle contract — no
-    // driver count() just to compare against 0); a gate-action failure
-    // must release the persisted vocab rather than leak it for the
-    // session (the driver branch early-returns OUTSIDE the file's
-    // retaining contract, so IT owns the block)
-    val driverMode =
-      try driverMaxVocab > 0 && vocab0.count() <= driverMaxVocab
-      catch { case t: Throwable => vocab0.unpersist(); throw t }
-    if (driverMode) {
+    // driver count() just to compare against 0)
+    if (driverMaxVocab > 0 && vocab0.count() <= driverMaxVocab) {
       // driver-mode rounds over the collected (symbols, wf) vocabulary;
-      // unpersist in finally — a failed collect must not leak the block
+      // the collected vocab's block is released at once
       var words: Array[(Array[String], Long)] =
-        try vocab0.collect().map { row =>
+        vocab0.collect().map { row =>
           (row.getString(0).stripPrefix("|").stripSuffix("|")
             .split("\\|\\|", -1), row.getLong(1))
-        } finally vocab0.unpersist()
+        }
+      s.release(vocab0)
       var r = 1
       var done = false
       while (r <= nMerges && !done) {
@@ -427,50 +409,43 @@ object TextAnalytics {
           r += 1
         }
       }
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("merge_rank",
-          org.apache.spark.sql.types.IntegerType),
-        org.apache.spark.sql.types.StructField("lhs",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("rhs",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("pair_count",
-          org.apache.spark.sql.types.LongType)))
-      return Df.fromRows(docs.spark, merges.toSeq, schema)
-    }
-    var vocab: org.apache.spark.sql.DataFrame = vocab0
-    var prevCut: Option[org.apache.spark.sql.DataFrame] = None
-    var r = 1
-    var done = false
-    while (r <= nMerges && !done) {
-      val toks = split(regexp_replace(col("seq"), "^\\||\\|$", ""), "\\|\\|")
-      val top = vocab
-        .select(col("wf"), explode(zip_with(
-          slice(toks, lit(1), size(toks) - 1),
-          slice(toks, lit(2), size(toks) - 1),
-          (a, b) => struct(a.as("l"), b.as("r")))).as("p"))
-        .groupBy(col("p.l").as("l"), col("p.r").as("r"))
-        .agg(sum(col("wf")).as("n"))
-        .orderBy(col("n").desc, col("l").asc, col("r").asc)
-        .limit(1).collect()
-      if (top.isEmpty) done = true
-      else {
-        val (l, rr, n) =
-          (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
-        merges += org.apache.spark.sql.Row(r, l, rr, n)
-        // alnum-only symbols: no escaping needed inside the literal
-        vocab = vocab.withColumn("seq",
-          expr(s"replace(seq, '|$l||$rr|', '|$l$rr|')"))
-        // cut the growing replace chain so planning stays O(16) per
-        // round; the eager checkpoint also supersedes the previous cut
-        if (r % 16 == 0) {
-          val cut = vocab.localCheckpoint()
-          prevCut.foreach(Df.unpersistAny)
-          prevCut = Some(cut)
-          vocab = cut
+    } else {
+      var vocab: org.apache.spark.sql.DataFrame = vocab0
+      var prevCut: Option[org.apache.spark.sql.DataFrame] = None
+      var r = 1
+      var done = false
+      while (r <= nMerges && !done) {
+        val toks = split(regexp_replace(col("seq"), "^\\||\\|$", ""), "\\|\\|")
+        val top = vocab
+          .select(col("wf"), explode(zip_with(
+            slice(toks, lit(1), size(toks) - 1),
+            slice(toks, lit(2), size(toks) - 1),
+            (a, b) => struct(a.as("l"), b.as("r")))).as("p"))
+          .groupBy(col("p.l").as("l"), col("p.r").as("r"))
+          .agg(sum(col("wf")).as("n"))
+          .orderBy(col("n").desc, col("l").asc, col("r").asc)
+          .limit(1).collect()
+        if (top.isEmpty) done = true
+        else {
+          val (l, rr, n) =
+            (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
+          merges += org.apache.spark.sql.Row(r, l, rr, n)
+          // alnum-only symbols: no escaping needed inside the literal
+          vocab = vocab.withColumn("seq",
+            expr(s"replace(seq, '|$l||$rr|', '|$l$rr|')"))
+          // cut the growing replace chain so planning stays O(16) per
+          // round; the eager checkpoint also supersedes the previous cut
+          if (r % 16 == 0) {
+            val cut = s.checkpoint(vocab)
+            prevCut.foreach(s.release)
+            prevCut = Some(cut)
+            vocab = cut
+          }
+          r += 1
         }
-        r += 1
       }
+      // the merges table is pure driver rows — the chain cuts back nothing
+      prevCut.foreach(s.release)
     }
     val schema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("merge_rank",
@@ -481,9 +456,7 @@ object TextAnalytics {
         org.apache.spark.sql.types.StringType),
       org.apache.spark.sql.types.StructField("pair_count",
         org.apache.spark.sql.types.LongType)))
-    // the merges table is pure driver rows — the chain cuts back nothing
-    prevCut.foreach(Df.unpersistAny)
-    Df.fromRows(docs.spark, merges.toSeq, schema).retaining(vocab0)
+    Df.fromRows(docs.spark, merges.toSeq, schema)
   }
 
   /** BPE ENCODING with a learned merge table — the other half of the
@@ -549,18 +522,16 @@ object TextAnalytics {
     * margins aggregate the SAME persisted bigram table; the joins are
     * vocabulary-keyed (tiny vs the corpus) onto the minCount-filtered
     * pair table. PMI rounds to 6dp (ln ulp absorption — the q115
-    * convention). Release the persisted bigram table with
-    * `Df.unpersistIntermediates()` after the terminal action. */
-  def pmiCollocations(docs: Df, textCol: String, minCount: Long = 5): Df = {
+    * convention). */
+  def pmiCollocations(docs: Df, textCol: String,
+                      minCount: Long = 5): Df = Materialize.scope { s =>
     require(minCount >= 1, s"pmiCollocations: minCount must be >= 1: $minCount")
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val bi = docs.sdf.select(tokens(col(textCol)).as("toks"))
+    val bi = s.persist(docs.sdf.select(tokens(col(textCol)).as("toks"))
       .where(size(col("toks")) >= 2)
       .select(explode(expr(
         """transform(sequence(0, size(toks) - 2),
           |  i -> struct(toks[i] AS w1, toks[i + 1] AS w2))""".stripMargin)).as("b"))
-      .select(col("b.w1").as("w1"), col("b.w2").as("w2"))
-      .persist(lvl)
+      .select(col("b.w1").as("w1"), col("b.w2").as("w2")))
     val pair = bi.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("n_pair"))
     val left = bi.groupBy(col("w1")).agg(count(lit(1)).as("n_w1"))
     val right = bi.groupBy(col("w2")).agg(count(lit(1)).as("n_w2"))
@@ -571,7 +542,6 @@ object TextAnalytics {
       .withColumn("pmi", round(log(col("n_pair").cast("double") * col("__n") /
         (col("n_w1").cast("double") * col("n_w2"))), 6))
       .select("w1", "w2", "n_pair", "n_w1", "n_w2", "pmi"))
-      .retaining(bi)
   }
 
   /** Class-based TF-IDF (the BERTopic c-TF-IDF formula, Grootendorst
@@ -588,15 +558,12 @@ object TextAnalytics {
     *
     * Scale: one tokenize pass (persisted — it feeds tf, f_t, and A);
     * both model aggs are vocabulary-keyed; A broadcasts as one row;
-    * the rank window partitions by class. Release with
-    * `Df.unpersistIntermediates()` after the terminal action. */
+    * the rank window partitions by class. */
   def classTfidf(docs: Df, textCol: String, classCol: String,
-                 k: Int = 10): Df = {
+                 k: Int = 10): Df = Materialize.scope { s =>
     require(k >= 1, s"classTfidf: k must be >= 1: $k")
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val toks = docs.sdf.where(col(classCol).isNotNull)
-      .select(col(classCol), explode(tokens(col(textCol))).as("term"))
-      .persist(lvl)
+    val toks = s.persist(docs.sdf.where(col(classCol).isNotNull)
+      .select(col(classCol), explode(tokens(col(textCol))).as("term")))
     val tf = toks.groupBy(col(classCol), col("term")).agg(count(lit(1)).as("tf"))
     val ft = toks.groupBy(col("term")).agg(count(lit(1)).as("ft"))
     val a = toks.groupBy(col(classCol)).agg(count(lit(1)).as("__ct"))
@@ -609,7 +576,6 @@ object TextAnalytics {
       .withColumn("rank", row_number().over(w))
       .where(col("rank") <= k)
       .select(col(classCol), col("rank"), col("term"), col("tf"), col("score")))
-      .retaining(toks)
   }
 
   /** Content-defined chunking (the FastCDC/rsync family idea applied
@@ -634,7 +600,7 @@ object TextAnalytics {
     * (8 bytes each), never text; the chunk rebuild is an in-row slice
     * over the joined arrays. No UDFs anywhere. */
   def cdcChunks(docs: Df, textCol: String, idCol: String,
-                window: Int = 4, modulus: Int = 64): Df = {
+                window: Int = 4, modulus: Int = 64): Df = Materialize.scope { s =>
     require(window >= 1, s"cdcChunks: window must be >= 1: $window")
     require(modulus >= 2, s"cdcChunks: modulus must be >= 2: $modulus")
     // Pipeline shape: tokenize once (persisted — the table feeds the
@@ -646,12 +612,10 @@ object TextAnalytics {
     // but CollapseProject inlines the aliases and interpreted
     // higher-order functions then re-evaluate the tokenize+hash chain
     // per ELEMENT — measured as minutes of CPU on a 500-doc corpus.
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val t = col("__toks")
-    val base = docs.sdf
+    val base = s.persist(docs.sdf
       .select(col(idCol), tokens(col(textCol)).as("__toks"))
-      .where(size(t) >= 1)
-      .persist(lvl)
+      .where(size(t) >= 1))
     // window starting at i (0-based) ends at i+window-1; a zero hash
     // cuts AFTER it, so the next chunk starts at token i+window; cuts
     // at or past the end are no-ops. The size guard matters: Spark's
@@ -683,7 +647,6 @@ object TextAnalytics {
         col("c.n_tokens").as("n_tokens"),
         hash32(col("c.chunk")).as("chunk_hash"),
         col("c.chunk").as(textCol)))
-      .retaining(base)
   }
 
   /** Corpus n-gram diversity profile — the repetitiveness diagnostic
@@ -741,27 +704,22 @@ object TextAnalytics {
     * join); unigram counts ride the same base table; all model joins
     * are vocabulary-keyed. Each −ln term is DECIMAL(18,8)-cast before
     * the order-independent sum; the mean rounds to 4dp (the q115
-    * convention). Release persisted intermediates with
-    * `Df.unpersistIntermediates()` after the terminal action. */
+    * convention). */
   def bigramNll(docs: Df, textCol: String, idCol: String,
-                lambda: Double = 0.7): Df = {
+                lambda: Double = 0.7): Df = Materialize.scope { s =>
     require(lambda >= 0 && lambda <= 1,
       s"bigramNll: lambda must be in [0, 1]: $lambda")
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val base = Materialize.barrier(
-      docs.sdf.select(col(idCol), tokens(col(textCol)).as("toks"))
-        .persist(lvl))
+    val base = s.barrier(
+      docs.sdf.select(col(idCol), tokens(col(textCol)).as("toks")))
     val uni = base.select(explode(col("toks")).as("w2"))
       .groupBy(col("w2")).agg(count(lit(1)).as("__cu"))
     val uniTotal = base.select(explode(col("toks")).as("t"))
       .agg(count(lit(1)).as("__nu"))
-    val bi = base.where(size(col("toks")) >= 2)
+    val bi = s.barrier(base.where(size(col("toks")) >= 2)
       .select(col(idCol), explode(expr(
         """transform(sequence(0, size(toks) - 2),
           |  i -> struct(toks[i] AS w1, toks[i + 1] AS w2))""".stripMargin)).as("b"))
-      .select(col(idCol), col("b.w1").as("w1"), col("b.w2").as("w2"))
-      .persist(lvl)
-    Materialize.barrier(bi)
+      .select(col(idCol), col("b.w1").as("w1"), col("b.w2").as("w2")))
     val pairCt = bi.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("__cb"))
     val leftCt = bi.groupBy(col("w1")).agg(count(lit(1)).as("__cl"))
     new Df(bi.join(pairCt, Seq("w1", "w2")).join(leftCt, Seq("w1"))
@@ -773,7 +731,6 @@ object TextAnalytics {
       .groupBy(col(idCol))
       .agg(count(lit(1)).as("n_transitions"),
         round(sum(col("__nll")).cast("double") / count(lit(1)), 4).as("avg_nll")))
-      .retaining(base, bi)
   }
 
   /** Trigram stupid-backoff NLL (Brants et al. 2007, "Large Language
@@ -803,12 +760,11 @@ object TextAnalytics {
     * −ln term is DECIMAL(18,8)-cast before the order-independent sum;
     * the mean rounds to 4dp (q115 convention). */
   def stupidBackoffNll(trainDocs: Df, scoreDocs: Df, textCol: String,
-                       idCol: String, alpha: Double = 0.4): Df = {
+                       idCol: String, alpha: Double = 0.4): Df = Materialize.scope { s =>
     require(alpha > 0 && alpha <= 1,
       s"stupidBackoffNll: alpha must be in (0, 1]: $alpha")
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     def toks(d: Df) = d.sdf.select(col(idCol), tokens(col(textCol)).as("toks"))
-    val train = Materialize.barrier(toks(trainDocs).persist(lvl))
+    val train = s.barrier(toks(trainDocs))
 
     def grams(df: org.apache.spark.sql.DataFrame, n: Int) =
       df.where(size(col("toks")) >= n)
@@ -822,8 +778,8 @@ object TextAnalytics {
       .agg(count(lit(1)).as("__c3"))
     val nTotal = train.select(explode(col("toks")).as("t"))
       .agg(count(lit(1)).as("__n"))
-    val bi = Materialize.barrier(grams(train, 2).groupBy(col("w1"), col("w2"))
-      .agg(count(lit(1)).as("__cb")).persist(lvl))
+    val bi = s.barrier(grams(train, 2).groupBy(col("w1"), col("w2"))
+      .agg(count(lit(1)).as("__cb")))
     val tri = grams(train, 3).groupBy(col("w1"), col("w2"), col("w3"))
       .agg(count(lit(1)).as("__ct"))
 
@@ -846,7 +802,6 @@ object TextAnalytics {
     new Df(scored.groupBy(col(idCol))
       .agg(count(lit(1)).as("n_trigrams"),
         round(sum(col("__nll")).cast("double") / count(lit(1)), 4).as("avg_nll")))
-      .retaining(train, bi)
   }
 
   /** Vocabulary coverage curve — for each requested vocabulary size V,
@@ -866,12 +821,12 @@ object TextAnalytics {
     * vocabularies); each vocab row then fans out only to the
     * requested Vs (|vs| small) for the covered sums, and the corpus
     * total arrives as a broadcast 1-row frame. */
-  def vocabCoverage(docs: Df, textCol: String, vs: Seq[Int]): Df = {
+  def vocabCoverage(docs: Df, textCol: String,
+                    vs: Seq[Int]): Df = Materialize.scope { s =>
     require(vs.nonEmpty && vs.forall(_ >= 1),
       s"vocabCoverage: vs must be non-empty positive: $vs")
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val cnt = docs.sdf.select(explode(tokens(col(textCol))).as("term"))
-      .groupBy(col("term")).agg(count(lit(1)).as("__c")).persist(lvl)
+    val cnt = s.persist(docs.sdf.select(explode(tokens(col(textCol))).as("term"))
+      .groupBy(col("term")).agg(count(lit(1)).as("__c")))
     val ranked = new Df(cnt.withColumn("__negc", -col("__c")))
       .withRowIndexScalable(Seq("__negc", "term"), "__rk").sdf
     val total = cnt.agg(sum(col("__c")).as("total"))
@@ -886,7 +841,6 @@ object TextAnalytics {
         round(col("covered").cast("double") / col("total"), 6))
       .select(col("v"), col("vocab_terms"), col("covered"), col("total"),
         col("coverage")))
-      .retaining(cnt)
   }
 
   /** Okapi BM25 weight per (doc, term) — the retrieval scorer [[tfidf]]
@@ -907,12 +861,11 @@ object TextAnalytics {
     * the SAME persisted tokenize pass; (N, total tokens) arrive as a
     * broadcast 1-row frame, df/idf ride the vocabulary-keyed join. */
   def bm25(docs: Df, textCol: String, idCol: String,
-           k1: Double = 1.2, b: Double = 0.75): Df = {
+           k1: Double = 1.2, b: Double = 0.75): Df = Materialize.scope { s =>
     require(k1 >= 0, s"bm25: k1 must be >= 0: $k1")
     require(b >= 0 && b <= 1, s"bm25: b must be in [0,1]: $b")
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val toks = docs.sdf.select(col(idCol),
-      explode(tokens(col(textCol))).as("term")).persist(lvl)
+    val toks = s.persist(docs.sdf.select(col(idCol),
+      explode(tokens(col(textCol))).as("term")))
     val tf = toks.groupBy(col(idCol), col("term")).agg(count(lit(1)).as("tf"))
     val lens = toks.groupBy(col(idCol)).agg(count(lit(1)).as("__len"))
     val dfT = tf.groupBy(col("term")).agg(count(lit(1)).as("__df"))
@@ -928,7 +881,6 @@ object TextAnalytics {
         ((col("tf") * lit(k1 + 1)) /
           (col("tf") + lit(k1) * (lit(1 - b) + lit(b) * (col("__len") / avg)))), 6))
       .select(col(idCol), col("term"), col("tf"), col("bm25")))
-      .retaining(toks)
   }
 
   /** BM25 top-N search — score every document against a bag-of-words
@@ -1016,11 +968,11 @@ object TextAnalytics {
     * vocabulary is term-keyed and vocabulary-sized, so membership is
     * one token-by-term shuffle join (AQE broadcasts the vocab side
     * while it fits). No driver-side vocabulary materialization. */
-  def oovRate(docs: Df, textCol: String, idCol: String, vocabSize: Int): Df = {
+  def oovRate(docs: Df, textCol: String, idCol: String,
+              vocabSize: Int): Df = Materialize.scope { s =>
     require(vocabSize >= 1, s"oovRate: vocabSize must be >= 1: $vocabSize")
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val toks = docs.sdf.select(col(idCol),
-      explode(tokens(col(textCol))).as("term")).persist(lvl)
+    val toks = s.persist(docs.sdf.select(col(idCol),
+      explode(tokens(col(textCol))).as("term")))
     val cnt = toks.groupBy(col("term")).agg(count(lit(1)).as("__c"))
     val vocab = new Df(cnt.withColumn("__negc", -col("__c")))
       .withRowIndexScalable(Seq("__negc", "term"), "__rk").sdf
@@ -1033,7 +985,6 @@ object TextAnalytics {
       .withColumn("oov_rate",
         round(col("n_oov").cast("double") / col("n_tokens"), 6))
       .select(col(idCol), col("n_tokens"), col("n_oov"), col("oov_rate")))
-      .retaining(toks)
   }
 
   /** χ²-based discriminative terms per class — the feature-selection
@@ -1052,7 +1003,7 @@ object TextAnalytics {
     * replay; the final per-class top-k is a bounded rank window over
     * |vocabulary| rows. */
   def chi2Terms(docs: Df, textCol: String, classCol: String,
-                idCol: String, k: Int = 10, minDf: Long = 5L): Df = {
+                idCol: String, k: Int = 10, minDf: Long = 5L): Df = Materialize.scope { s =>
     require(k >= 1 && minDf >= 1)
     val docTerm = docs.sdf.select(col(classCol).as("cls"), col(idCol),
         explode(tokens(col(textCol))).as("term"))
@@ -1060,9 +1011,8 @@ object TextAnalytics {
     // vocabulary-sized; persisted because BOTH the scoring join and the
     // term margins consume it — without this the tokenize pass runs
     // twice (PlanSpec pins the ≤2-corpus-scan bound)
-    val a = docTerm.groupBy(col("cls"), col("term"))
-      .agg(count(lit(1)).as("a"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val a = s.persist(docTerm.groupBy(col("cls"), col("term"))
+      .agg(count(lit(1)).as("a")))
     val termTotals = a.groupBy(col("term")).agg(sum(col("a")).as("ta"))
     val classTotals = docs.sdf.groupBy(col(classCol).as("cls"))
       .agg(countDistinct(col(idCol)).as("nc"))
@@ -1095,6 +1045,5 @@ object TextAnalytics {
     new Df(scored.withColumn("rank", row_number().over(w))
       .where(col("rank") <= k)
       .selectExpr(s"cls AS $classCol", "term", "chi2", "rank"))
-      .retaining(a)
   }
 }

@@ -10,9 +10,12 @@ import org.scalatest.funsuite.AnyFunSuite
   * `clearCache` cannot free RDD-level storage (a `localCheckpoint`'s
   * blocks — exactly how connectedComponents leaked one |V|-row RDD per
   * iteration for four rounds), and `releaseRetained` only frees what an
-  * operator ATTACHED — so any block still live after both is storage
+  * operator registered — so any block still live after both is storage
   * nothing can reach: a leak by construction, in whichever operator the
-  * failing query name points at.
+  * failing query name points at. Stricter still, `releaseRetained` ALONE
+  * must leave nothing: [[graft.operators.Materialize]] registers every
+  * frame the moment it persists it, so a block that only `clearCache`
+  * reaches is a persist outside the one owner.
   *
   * Sweeps EVERY SparkEntry query at sf0.001 (the entry-contract sf), so
   * a new operator wired into the query surface gets this guarantee
@@ -58,6 +61,7 @@ class CacheHygieneSpec extends AnyFunSuite {
     assert(sc.getPersistentRDDs.isEmpty,
       s"dirty slate before sweep: ${sc.getPersistentRDDs.values.map(_.name)}")
     val leaks = scala.collection.mutable.ListBuffer.empty[String]
+    val unregistered = scala.collection.mutable.ListBuffer.empty[String]
     val waste = scala.collection.mutable.ListBuffer.empty[String]
     SparkEntry.queries.foreach { case (name, fn) =>
       val df = fn(spark, sf)
@@ -72,6 +76,11 @@ class CacheHygieneSpec extends AnyFunSuite {
       // (iterative operators) or sits on the path the count scans
       df.count()
       Df.releaseRetained()
+      val afterRelease = sc.getPersistentRDDs
+      if (afterRelease.nonEmpty || !spark.sharedState.cacheManager.isEmpty)
+        unregistered += s"$name -> ${afterRelease.size} persistent RDDs " +
+          s"(${afterRelease.values.map(_.name).mkString("; ")}), cacheManager " +
+          s"empty: ${spark.sharedState.cacheManager.isEmpty}"
       spark.catalog.clearCache()
       val live = sc.getPersistentRDDs
       if (live.nonEmpty) {
@@ -82,6 +91,9 @@ class CacheHygieneSpec extends AnyFunSuite {
     }
     assert(leaks.isEmpty,
       s"queries leaking unreachable blocks:\n  ${leaks.mkString("\n  ")}")
+    assert(unregistered.isEmpty,
+      s"queries leaving cached data that releaseRetained does not reach:\n  " +
+        unregistered.mkString("\n  "))
     assert(waste.isEmpty,
       s"loop-invariant expensive work inside HOF lambdas (recomputed per " +
         s"array element):\n  ${waste.distinct.mkString("\n  ")}")

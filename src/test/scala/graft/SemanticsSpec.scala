@@ -149,6 +149,30 @@ class SemanticsSpec extends AnyFunSuite {
     } finally spark.conf.set(key, saved)
   }
 
+  test("saltedJoin keeps the salt unless the right side fits the broadcast threshold twice") {
+    // a fresh session, so the threshold set here reaches no other suite
+    val ss = spark.newSession()
+    val li = Df.readParquet(ss, s"$sf/lineitem.parquet")
+      .select("l_orderkey", "l_quantity")
+    val o = Df.readParquet(ss, s"$sf/orders.parquet")
+      .select("o_orderkey", "o_totalprice")
+      .rename(Map("o_orderkey" -> "l_orderkey"))
+    val rSize = o.sdf.queryExecution.optimizedPlan.stats.sizeInBytes.toLong
+    def run(threshold: Long) = {
+      ss.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold.toString)
+      val j = li.saltedJoin(o, Seq("l_orderkey"), "inner", salt = 8)
+      (j.sdf.queryExecution.analyzed.toString.contains("__salt"),
+        j.sdf.collect().map(_.toString).sorted.toSeq)
+    }
+    // fits once but not twice: the estimate may underrun the runtime
+    // size, so the requested salting stays
+    val (saltedBetween, between) = run(rSize + rSize / 2)
+    val (saltedAbove, above) = run(rSize * 2)
+    assert(saltedBetween, s"threshold 1.5x the $rSize-byte estimate must salt")
+    assert(!saltedAbove, s"threshold 2x the $rSize-byte estimate must not salt")
+    assert(between.nonEmpty && between == above)
+  }
+
   test("pivotTable spreads explicit values into static columns") {
     val d = Df.fromRows(spark,
       Seq(Row(1L, "a", 10.0), Row(1L, "b", 20.0), Row(2L, "a", 5.0)),
