@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.api.Df
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.storage.StorageLevel
 
 /** The one owner of operator intermediates: the only code that persists,
@@ -71,9 +72,16 @@ private[graft] object Materialize {
       p
     }
 
-    /** Eager `localCheckpoint` of `df`, held. Releasing a checkpoint is
+    /** Eager `localCheckpoint` of `df`, held before its materializing
+      * job runs: Spark persists the checkpoint's RDD first and, when an
+      * eager checkpoint's job throws, drops the only handle to it. The
+      * job is the one the eager form runs. Releasing a checkpoint is
       * terminal: it has no lineage to recompute from. */
-    def checkpoint(df: DataFrame): DataFrame = hold(df.localCheckpoint())
+    def checkpoint(df: DataFrame): DataFrame = {
+      val c = hold(df.localCheckpoint(eager = false))
+      c.queryExecution.analyzed.asInstanceOf[LogicalRDD].rdd.count()
+      c
+    }
 
     /** Release a held frame early (a superseded loop round or layout). */
     def release(df: DataFrame): Unit = {

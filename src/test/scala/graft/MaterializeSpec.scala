@@ -1,7 +1,7 @@
 package graft
 
 import graft.api.Df
-import graft.operators.{Curation, Dedup, Funnels, Graphs}
+import graft.operators.{Curation, Dedup, Funnels, Graphs, Materialize}
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -81,6 +81,23 @@ class MaterializeSpec extends AnyFunSuite {
 
   test("pageRank: a failing node count releases the normalized edges") {
     strandsNothing(Graphs.pageRank(pairs, "a", "b"))
+  }
+
+  test("a checkpoint whose own job fails leaves no persisted RDD") {
+    // no shuffle below the checkpoint, so the failing job is the
+    // checkpoint's own, after Spark has persisted its RDD
+    val narrow = pairs.select((col("a") + 1).as("a"))
+    strandsNothing(Materialize.scope(_.checkpoint(narrow)))
+    // on success it runs the one job an eager localCheckpoint runs
+    val ok = Df.fromRows(spark, (1L to 30L).map(Row(_)),
+      StructType(Seq(StructField("a", LongType)))).sdf.select((col("a") + 1).as("a"))
+    val (eager, eagerJobs) = jobsDuring(ok.localCheckpoint())
+    val (held, heldJobs) = jobsDuring(Materialize.scope(_.checkpoint(ok)))
+    assert(heldJobs == eagerJobs && heldJobs == 1)
+    assert(held.collect().toSeq == eager.collect().toSeq)
+    Df.releaseRetained()
+    Df.unpersistAny(eager)
+    assert(cacheIsEmpty())
   }
 
   test("source census: only Materialize persists, checkpoints and attaches") {
