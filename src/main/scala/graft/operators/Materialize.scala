@@ -100,7 +100,9 @@ private[graft] object Materialize {
   }
 
   /** Run one operator body over a fresh [[Scope]]: attach what it still
-    * holds to a returned [[Df]], or release it all if the body throws. */
+    * holds to a returned [[Df]], or release it all if the body throws.
+    * The body must not `return` from the enclosing method: a non-local
+    * return leaves by exception, so its frames would be released. */
   def scope[R](body: Scope => R): R = {
     val s = new Scope
     val r = try body(s) catch { case t: Throwable => s.releaseAll(t); throw t }
