@@ -42,13 +42,4 @@ object GraftSession {
     s.trim.toIntOption.filter(_ >= 1).getOrElse(throw new IllegalArgumentException(
       s"SPARK_GRAFT_CPUS must be a positive int, got '$s'"))
   }
-
-  /** A numeric graft knob from the session conf: `default` when unset,
-    * else the value as a non-negative long. A value that is not one is
-    * an error that names the key and the value. */
-  private[graft] def longConf(spark: SparkSession, key: String, default: Long): Long =
-    spark.conf.getOption(key).fold(default) { s =>
-      s.trim.toLongOption.filter(_ >= 0).getOrElse(throw new IllegalArgumentException(
-        s"$key must be a non-negative long, got '$s'"))
-    }
 }

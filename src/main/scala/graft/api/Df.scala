@@ -302,7 +302,7 @@ final class Df(val sdf: DataFrame, val indexCol: Option[String] = None) {
     // exchange's full parallelism (the r15 protocol-pin convention)
     val ranged = sdf.repartitionByRange(
       if (numPartitions > 0) numPartitions
-      else graft.operators.Quantiles.pinnedShufflePartitions(sdf),
+      else graft.operators.Gate.shufflePartitions(sdf),
       keys: _*).sortWithinPartitions(keys: _*)
     val schema1 = StructType(
       ranged.schema.fields :+ StructField(name, LongType, nullable = false))
@@ -497,7 +497,7 @@ final class Df(val sdf: DataFrame, val indexCol: Option[String] = None) {
   private def keylessCeiling(
       w: org.apache.spark.sql.expressions.WindowSpec,
       value: Column, verb: String): Column = {
-    val cap = graft.GraftSession.longConf(sdf.sparkSession,
+    val cap = graft.operators.Gate.knob(sdf.sparkSession,
       "graft.keylessWindowMaxRows", 10000000L)
     when(row_number().over(w) > cap, raise_error(lit(
       s"$verb: keyless window over more than $cap rows — a " +
@@ -515,8 +515,8 @@ final class Df(val sdf: DataFrame, val indexCol: Option[String] = None) {
   private def keylessScanOut(out: String)(run: String => Df): Df =
     if (sdf.columns.contains(out)) {
       val t = s"__graft_out_$out"
-      val scanned = run(t).sdf
-      derived(scanned.withColumn(out, scanned(t)).drop(t))
+      val r = run(t)
+      r.derived(r.sdf.withColumn(out, r.sdf(t)).drop(t))
     } else run(out)
 
   /** Batch several KEYLESS order-based verbs into ONE
@@ -552,16 +552,8 @@ final class Df(val sdf: DataFrame, val indexCol: Option[String] = None) {
     * verbs exactly (ScanSpec pins the batch ≡ the INDEPENDENT-verb
     * chain differentially). Same eager caveat as the single keyless
     * verbs; order-key ties take one consistent arbitrary order
-    * (DIVERGENCES #1). `persistSorted`: Some(true) caches the sorted
-    * partitions so the protocol's second pass skips the shuffle read +
-    * re-sort, Some(false) forces the two-pass re-fetch, None (default)
-    * lets the adaptive gate decide: ON once the optimizer's size
-    * estimate of the input reaches `spark.graft.scan.persistAutoBytes`
-    * (default 1.5 GiB). Per-call because one session can mix
-    * page-cache-resident scans with scans whose shuffle files outrun it
-    * (VERDICT r19 item 7). */
-  def scanKeyless(orderKeys: Seq[String],
-                  persistSorted: Option[Boolean] = None)(
+    * (DIVERGENCES #1). */
+  def scanKeyless(orderKeys: Seq[String])(
       build: Df.KeylessScanBatch => Df.KeylessScanBatch): Df = {
     import graft.operators.GroupedScan
     val specs = build(new Df.KeylessScanBatch(Nil)).specs.reverse
@@ -600,13 +592,12 @@ final class Df(val sdf: DataFrame, val indexCol: Option[String] = None) {
     val outName = specs.map(_.out).map(o =>
       o -> (if (sdf.columns.contains(o)) s"__graft_out_$o" else o)).toMap
     val verbs = specs.map(s => s.mk(widen.getOrElse(s.in, s.in), outName(s.out)))
-    val scanned = GroupedScan.scan(src, Nil,
-      orderKeys.map(_ -> !revs.head), verbs, persistSorted = persistSorted)
-    val restored = specs.map(_.out).foldLeft(scanned) { (d, o) =>
+    val scanned = GroupedScan.scan(src, Nil, orderKeys.map(_ -> !revs.head), verbs)
+    val restored = specs.map(_.out).foldLeft(scanned.sdf) { (d, o) =>
       val t = outName(o)
       if (t == o) d else d.withColumn(o, d(t)).drop(t)
     }
-    derived(restored.drop(widen.values.toSeq: _*))
+    derived(restored.drop(widen.values.toSeq: _*)).inheriting(scanned)
   }
 
   /** pandas `diff(periods)` over an explicit order (and optional
@@ -636,7 +627,7 @@ final class Df(val sdf: DataFrame, val indexCol: Option[String] = None) {
         }.getOrElse(this)
         val res = src.keylessScanOut(out)(o => src.groupby()
           .diffScalable(widenTmp.getOrElse(c), orderKeys, periods, o))
-        widenTmp.map(t => derived(res.sdf.drop(t))).getOrElse(res)
+        widenTmp.map(t => res.derived(res.sdf.drop(t))).getOrElse(res)
       }
     } else {
       val w = org.apache.spark.sql.expressions.Window
@@ -850,7 +841,7 @@ final class Df(val sdf: DataFrame, val indexCol: Option[String] = None) {
       val scanned = groupby().scanScalableOrdered(
         orderKeys.map(_ -> forward),
         tmps.map { case (c, t) => graft.operators.GroupedScan.Ffill(c, t) })
-      derived(tmps.foldLeft(scanned.sdf) { case (d, (c, t)) =>
+      scanned.derived(tmps.foldLeft(scanned.sdf) { case (d, (c, t)) =>
         d.withColumn(c, d(t)) }.drop(tmps.map(_._2): _*))
     } else {
       import org.apache.spark.sql.expressions.Window
@@ -930,7 +921,7 @@ final class Df(val sdf: DataFrame, val indexCol: Option[String] = None) {
       } else {
         val aggRow = sdf.agg(expr(
           s"transform(percentile_approx(`$c`, array(${probs.mkString(", ")}), " +
-            "10000), x -> round(x, 6))").as("b")).head
+            "10000), x -> round(x, 6))").as("b")).head()
         if (aggRow.isNullAt(0)) throw new IllegalArgumentException(
           s"qcut: no non-null values in column '$c'")
         aggRow.getSeq[Double](0)
@@ -973,9 +964,8 @@ final class Df(val sdf: DataFrame, val indexCol: Option[String] = None) {
     // that underruns the runtime size would otherwise drop the
     // requested salting for a join that then shuffles after all.
     val bcThresh = sdf.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
-    val rSize = right.sdf.queryExecution.optimizedPlan.stats.sizeInBytes
-    if (bcThresh >= 0 && rSize < BigInt(Long.MaxValue) / 2 &&
-        rSize * Df.SaltBroadcastMargin <= BigInt(bcThresh))
+    if (bcThresh >= 0 && graft.operators.Gate.estimatedBytes(right.sdf)
+        .exists(_ * Df.SaltBroadcastMargin <= BigInt(bcThresh)))
       return derived(sdf.join(right.sdf, on, how)).inheriting(right)
     val l = sdf.withColumn("__salt",
       pmod(hash(on.map(sdf(_)) :+ monotonically_increasing_id(): _*), lit(salt)))

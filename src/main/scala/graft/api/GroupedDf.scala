@@ -325,27 +325,15 @@ final class GroupedDf private[api] (
     * dominates (skew). All verbs in one call share a single sort. */
   def scanScalable(orderKeys: Seq[String],
                    verbs: Seq[graft.operators.GroupedScan.Verb],
-                   numPartitions: Int = 0,
-                   persistSorted: Option[Boolean] = None): Df =
-    scanScalableOrdered(orderKeys.map(_ -> true), verbs, numPartitions,
-      persistSorted)
+                   numPartitions: Int = 0): Df =
+    scanScalableOrdered(orderKeys.map(_ -> true), verbs, numPartitions)
 
-  /** [[scanScalable]] with per-key sort direction (name → ascending?).
-    * `persistSorted` — Some(true) caches the sorted partitions so the
-    * protocol's second pass skips the shuffle read + re-sort (one extra
-    * cached copy of the input; worthwhile when the shuffle files outrun
-    * the page cache), Some(false) forces the two-pass re-fetch, None
-    * (default) lets the adaptive gate decide: ON once the optimizer's
-    * size estimate of the input reaches
-    * `spark.graft.scan.persistAutoBytes` (default 1.5 GiB). The
-    * single-verb convenience wrappers (cumsumScalable, …) use the
-    * default — batch multi-verb calls are where the choice pays. */
+  /** [[scanScalable]] with per-key sort direction (name → ascending?). */
   def scanScalableOrdered(orderKeys: Seq[(String, Boolean)],
                           verbs: Seq[graft.operators.GroupedScan.Verb],
-                          numPartitions: Int = 0,
-                          persistSorted: Option[Boolean] = None): Df =
-    dfOut(graft.operators.GroupedScan.scan(
-      sdf, keys, orderKeys, verbs, numPartitions, persistSorted))
+                          numPartitions: Int = 0): Df =
+    graft.operators.GroupedScan.scan(
+      sdf, keys, orderKeys, verbs, numPartitions).inheriting(df)
 
   def cumsumScalable(valueCol: String, orderKeys: Seq[String],
                      out: String = "cumsum"): Df =
@@ -435,8 +423,8 @@ final class GroupedDf private[api] (
       case other => throw new IllegalArgumentException(
         s"rankScalable: method must be min|dense: $other")
     }
-    dfOut(graft.operators.GroupedScan.scan(
-      sdf, keys, Seq(valueCol -> ascending), Seq(verb)))
+    graft.operators.GroupedScan.scan(
+      sdf, keys, Seq(valueCol -> ascending), Seq(verb)).inheriting(df)
   }
 
   /** `GroupbyAggregation` dict/list spec (`_groupby.py:136-190`):

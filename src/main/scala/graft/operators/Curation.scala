@@ -403,7 +403,7 @@ object Curation {
     require(n > 0, s"timeSplit: no non-NULL values in '$tsCol'")
     val hold = math.max(1L, math.floor(n * holdoutFrac).toLong).toInt
     val cutoff = days.sort(col("__d").desc).limit(hold)
-      .agg(min("__d")).head.getTimestamp(0)
+      .agg(min("__d")).head().getTimestamp(0)
     new Df(rows.withColumn("split",
       when(date_trunc("DAY", col(tsCol)) >= lit(cutoff),
         lit(holdoutLabel)).otherwise(lit(trainLabel))))
@@ -524,7 +524,7 @@ object Curation {
     // r15 protocol-pin convention)
     val ranged0 = docs.sdf.repartitionByRange(
       if (numPartitions > 0) numPartitions
-      else Quantiles.pinnedShufflePartitions(docs.sdf), keys: _*)
+      else Gate.shufflePartitions(docs.sdf), keys: _*)
     val ranged = s.persist(ranged0.sortWithinPartitions(keys: _*)
       .withColumn("__pid", spark_partition_id()))
     val totals = ranged.groupBy("__pid")

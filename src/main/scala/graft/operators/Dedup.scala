@@ -3,6 +3,7 @@ package graft.operators
 import graft.api.Df
 import graft.functions.TextFunctions._
 import graft.functions.VectorFunctions._
+import graft.plans.GraftFunctions
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -179,10 +180,8 @@ object Dedup {
     * meant an unbounded, unspillable per-group buffer — the cap
     * protected pair volume but not executor memory. Over-cap keys are
     * now dropped BEFORE any per-group buffer forms, by one of two
-    * result-identical pre-filters behind the repo's scale-gate
-    * convention (USAGE.md "Scale gates" — planning-time size estimate,
-    * conf-overridable, identical rows either side; DedupSpec pins the
-    * two paths differentially):
+    * result-identical pre-filters behind an estimated scale gate
+    * ([[Gate]]; DedupSpec pins the two paths differentially):
     *
     *  - small index (optimizer estimate < `spark.graft.dedup.
     *    pairsPrecountBytes`, default 16 MiB): a window count over the
@@ -213,12 +212,11 @@ object Dedup {
                           idCol: String, payload: Seq[String],
                           maxBucket: Int): DataFrame = {
     val kc = keyCols.map(col)
-    val sz = index.queryExecution.optimizedPlan.stats.sizeInBytes
-    val thresh = graft.GraftSession.longConf(index.sparkSession,
+    val sz = Gate.estimatedBytes(index)
+    val thresh = Gate.knob(index.sparkSession,
       "spark.graft.dedup.pairsPrecountBytes", 16L << 20)
     log.debug(s"bucketPairs: keys=$keyCols estBytes=$sz thresh=$thresh")
-    val statsKnown = sz < BigInt(Long.MaxValue) / 2
-    val keep = if (statsKnown && sz < thresh) {
+    val keep = if (sz.exists(_ < thresh)) {
       val w = org.apache.spark.sql.expressions.Window.partitionBy(kc: _*)
       index.withColumn("__bn", count(lit(1)).over(w))
         .where(col("__bn") <= maxBucket).drop("__bn")
@@ -358,19 +356,19 @@ object Dedup {
           "Spark would clamp the sketch silently and its false-positive " +
           "rate would approach 1; raise the conf (and maxNumBits) to the " +
           "corpus size first"))
-    graft.plans.GraftFunctions.register(newDocs.spark)
     val outCols = newDocs.sdf.columns.toSeq
     val h = xxhash64(col("__fp"))
     val newFp = s.persist(newDocs.sdf
       .withColumn("__fp", fingerprint(col(textCol))))
     val corpusFp = corpus.sdf.select(fingerprint(col(textCol)).as("__fp"))
-    val corpusBloom = corpusFp.agg(bloomAgg(h, expectedCorpusItems).as("b"))
-      .head.getAs[Array[Byte]](0)
+    val corpusBloom = corpusFp
+      .agg(GraftFunctions.bloomAgg(h, expectedCorpusItems).as("b"))
+      .head().getAs[Array[Byte]](0)
     val survivors =
       if (corpusBloom == null) newFp // empty corpus: the whole batch is new
       else {
-        val cand = s.persist(newFp.where(bloomMightContain(corpusBloom, h)))
-        val definitelyNew = newFp.where(!bloomMightContain(corpusBloom, h))
+        val cand = s.persist(newFp.where(GraftFunctions.mightContain(corpusBloom, h)))
+        val definitelyNew = newFp.where(!GraftFunctions.mightContain(corpusBloom, h))
         // candidate sketch sized from the ACTUAL candidate count — cand
         // is already persisted, so the count is one cached scan, and a
         // corpus-sized buffer per partial task for a handful of hits is
@@ -383,34 +381,17 @@ object Dedup {
           if (candCount == 0) cand.limit(0)
           else {
             val candBloom = cand
-              .agg(bloomAgg(h, math.min(math.max(candCount, 1L), maxItems)).as("b"))
-              .head.getAs[Array[Byte]](0)
+              .agg(GraftFunctions.bloomAgg(h,
+                math.min(math.max(candCount, 1L), maxItems)).as("b"))
+              .head().getAs[Array[Byte]](0)
             cand.join(
-              corpusFp.where(bloomMightContain(candBloom, xxhash64(col("__fp")))),
+              corpusFp.where(GraftFunctions.mightContain(candBloom, xxhash64(col("__fp")))),
               Seq("__fp"), "left_anti")
           }
         definitelyNew.unionByName(verified)
       }
     new Df(survivors.select(outCols.map(col): _*))
   }
-
-  /** One-pass fixed-size Bloom sketch over a LongType hash column —
-    * Spark's own `BloomFilterAggregate` (the engine's runtime-filter
-    * sketch), reached through the graft function registry since it has
-    * no public DSL wrapper (`GraftFunctions.register` is the file-wide
-    * convention for native expressions). */
-  private def bloomAgg(hashed: org.apache.spark.sql.Column,
-                       expectedItems: Long): org.apache.spark.sql.Column =
-    call_function("graft_bloom_agg", hashed, lit(expectedItems))
-
-  /** Membership probe against a serialized sketch embedded as a LITERAL
-    * (required: `BloomFilterMightContain` type-checks only foldable /
-    * subquery sketch sides, and a literal ships with the task binary
-    * like any broadcast scalar). */
-  private def bloomMightContain(bloom: Array[Byte],
-                                hashed: org.apache.spark.sql.Column)
-      : org.apache.spark.sql.Column =
-    call_function("graft_might_contain", lit(bloom), hashed)
 
   /** MinHash-LSH candidate pairs: returns (id_a, id_b, jaccard) for
     * document pairs sharing at least one LSH band, with the EXACT
@@ -610,13 +591,12 @@ object Dedup {
     // codegen'd merge-loop jaccard (graft.plans.SortedJaccard) — O(n+m)
     // per pair with no hash-set allocation; arrays are sorted+distinct
     // by construction.
-    graft.plans.GraftFunctions.register(docs.spark)
     val full = sh.select(col("id"), col("sh"), col("nsh"))
     val pairs = candidates
       .join(full.select(col("id").as("id_a"), col("sh").as("sh_a")), Seq("id_a"))
       .join(full.select(col("id").as("id_b"), col("sh").as("sh_b")), Seq("id_b"))
     new Df(pairs
-      .withColumn("jaccard", round(expr("graft_jaccard_sorted(sh_a, sh_b)"), 6))
+      .withColumn("jaccard", round(GraftFunctions.jaccardSorted(col("sh_a"), col("sh_b")), 6))
       .where(col("jaccard") >= minJaccard)
       .select("id_a", "id_b", "jaccard"))
   }
@@ -669,7 +649,6 @@ object Dedup {
       (minCosine >= -1.0 && minCosine <= 1.0,
         s"minCosine must be in [-1, 1]: $minCosine"),
       (maxBucket >= 1, s"maxBucket must be >= 1: $maxBucket"))
-    graft.plans.GraftFunctions.register(corpus.spark)
     def side(d: Df, idAs: String, vAs: String) =
       capBuckets(d.sdf
         .where(graft.operators.Similarity.fullyFinite(col(vecCol)))
@@ -679,7 +658,7 @@ object Dedup {
         maxBucket, cols = Seq("__bk"))
     new Df(side(corpus, "id_a", "v_a")
       .join(side(newVecs, "id_b", "v_b"), Seq("__bk"))
-      .withColumn("cosine", round(expr("graft_cosine(v_a, v_b)"), 6))
+      .withColumn("cosine", round(GraftFunctions.cosine(col("v_a"), col("v_b")), 6))
       .where(col("cosine") >= minCosine)
       .select("id_a", "id_b", "cosine"))
   }
@@ -724,12 +703,7 @@ object Dedup {
     * docs with no near-dup pair are their own singleton cluster and are
     * simply absent (callers left-join + coalesce to self).
     *
-    * `broadcastMaxNodes` follows the repo-wide scale-gate convention
-    * (USAGE.md "Scale gates", shared with
-    * [[graft.operators.Graphs.pageRank]]'s `broadcastMaxNodes` and
-    * [[graft.operators.TextAnalytics.bpeMerges]]'s `driverMaxVocab`):
-    * measured state size, identical results either side, 0 disables
-    * the fast path unconditionally. */
+    * `broadcastMaxNodes` is a measured scale gate on |V| ([[Gate]]). */
   def connectedComponents(pairs: Df, aCol: String, bCol: String,
                           maxIter: Int = 20,
                           broadcastMaxNodes: Long = 250000): Df = Materialize.scope { s =>
@@ -770,10 +744,7 @@ object Dedup {
     // the shuffle rounds run over the dst-re-laid-out edge list (below);
     // labels and cluster ids are IDENTICAL across the gate (min-label
     // fixpoint, not order-sensitive).
-    // short-circuit: broadcastMaxNodes = 0 explicitly requests the pure
-    // shuffle path (the q269 forced-path contract, gate-flip fuzz) — do
-    // not pay a driver count() action just to compare against 0.
-    val bcastLabels = broadcastMaxNodes > 0 && labels.count() <= broadcastMaxNodes
+    val bcastLabels = Gate.measured(broadcastMaxNodes)(labels.count())
     def hint(d: DataFrame): DataFrame = if (bcastLabels) broadcast(d) else d
     // shuffle mode only: re-layout the persisted edges by dst ONCE (the
     // pageRank move). distinct() leaves (src,dst) hash partitioning,
@@ -1204,7 +1175,6 @@ object Dedup {
     // native codegen'd expression (graft.plans.FloatCosine): one fused
     // loop per pair, no intermediate arrays — bit-identical to the HOF
     // formulation, ~single-pass FLOP cost at 100 TB pair volumes
-    graft.plans.GraftFunctions.register(vecs.spark)
     val v = capBuckets(vecs.sdf.select(col(idCol).as("id"), col(vecCol).as("v"),
       coalesce(col(bucketCol).cast("string"), lit("\u0000__null__")).as("bk")),
       maxBucket, cols = Seq("bk"))
@@ -1212,7 +1182,7 @@ object Dedup {
     val b = v.select(col("id").as("id_b"), col("v").as("v_b"), col("bk"))
     new Df(a.join(b, Seq("bk"))
       .where(col("id_a") < col("id_b"))
-      .withColumn("cosine", round(expr("graft_cosine(v_a, v_b)"), 6))
+      .withColumn("cosine", round(GraftFunctions.cosine(col("v_a"), col("v_b")), 6))
       .where(col("cosine") >= minCosine)
       .select("id_a", "id_b", "cosine"))
   }

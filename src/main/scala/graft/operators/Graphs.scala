@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.api.Df
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Iterative graph analytics over edge-list DataFrames — the web-graph
@@ -59,13 +59,7 @@ object Graphs {
     * Driver holds only the scalar N; the broadcast in the gated mode
     * ships |V| × ~40 B (250k nodes ≈ 10 MB, the default ceiling).
     *
-    * `broadcastMaxNodes` follows the repo-wide scale-gate convention
-    * (USAGE.md "Scale gates", shared with
-    * [[graft.operators.Dedup.connectedComponents]]'s
-    * `broadcastMaxNodes` and
-    * [[graft.operators.TextAnalytics.bpeMerges]]'s `driverMaxVocab`):
-    * measured state size, identical results either side, 0 disables
-    * the fast path unconditionally. */
+    * `broadcastMaxNodes` is a measured scale gate on N ([[Gate]]). */
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
                iterations: Int = 5, damping: Double = 0.85,
                broadcastMaxNodes: Long = 250000): Df = Materialize.scope { s =>
@@ -91,10 +85,7 @@ object Graphs {
       .select(explode(array(col("__src"), col("__dst"))).as("node")).distinct())
     val n = nodes.count()
     val teleport = (1 - damping) / n
-    // same 0-disables contract as the other two scale gates (USAGE.md
-    // "Scale gates"): 0 means the shuffle path unconditionally, even for
-    // a degenerate 0-node input
-    val bcast = broadcastMaxNodes > 0 && n <= broadcastMaxNodes
+    val bcast = Gate.measured(broadcastMaxNodes)(n)
 
     // identical arithmetic on both paths (the SQL oracle mirrors it):
     // only the JOIN STRATEGY and materialization cadence differ, so the

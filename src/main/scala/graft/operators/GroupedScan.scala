@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.api.Df
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions.monotonically_increasing_id
 import org.apache.spark.sql.types._
@@ -145,8 +146,7 @@ object GroupedScan {
     * verb; row order of the result is the scan order. */
   def scan(df: DataFrame, groupKeys: Seq[String],
            orderKeys: Seq[(String, Boolean)], verbs: Seq[Verb],
-           numPartitions: Int = 0,
-           persistSorted: Option[Boolean] = None): DataFrame = Materialize.scope { s =>
+           numPartitions: Int = 0): Df = Materialize.scope { s =>
     require(orderKeys.nonEmpty, "scan: orderKeys required")
     require(verbs.nonEmpty, "scan: at least one verb")
     val in = df.schema
@@ -182,7 +182,7 @@ object GroupedScan {
     // tasks (the r15 q55 lesson, applied to the scan). Sized on the
     // UNtagged df (the estimate only feeds the count).
     val pinnedParts = if (numPartitions > 0) numPartitions
-    else Quantiles.pinnedShufflePartitions(df)
+    else Gate.shufflePartitions(df)
     val ranged = tagged.repartitionByRange(pinnedParts, sortCols: _*)
       .sortWithinPartitions(sortCols: _*)
 
@@ -201,17 +201,15 @@ object GroupedScan {
     // (DataFrame-level persist → compressed columnar cached batches,
     // MEMORY_AND_DISK) so pass 2 skips the shuffle read and
     // the re-sort, at the cost of a second cached copy of the input —
-    // blocks drain via Df.releaseRetained like every operator persist.
+    // the frame is attached to the result like every operator persist.
     // Cached partitions replay pass 1's exact row order; an evicted
     // block re-sorts with the frozen tie column to the identical order.
     // (An RDD[Row]-level persist was tried first and ruled out: 50M-row
     // Java-serialized Row blocks trip a BlockManager put AssertionError
     // under memory pressure on 4.1 — BENCHLOG r19.) The InternalRow→Row
     // conversion is inherently per-pass either way.
-    // Per-call `persistSorted` (VERDICT r19 item 7) decides when set: a
-    // caller mixing small and huge scans in one session chooses per call.
-    // ADAPTIVE default (r21): when the call did not choose, flip ON once
-    // the optimizer's size estimate for the scan input crosses
+    // An estimated gate ([[Gate]], r21): ON once the optimizer's size
+    // estimate for the scan input reaches
     // `spark.graft.scan.persistAutoBytes`. The r20 100M-row A/B
     // measured the crossover: caching the sorted partitions beats pass
     // 2's shuffle re-fetch + re-sort by ~1.8x at 100M rows (~4.5 GB
@@ -223,14 +221,11 @@ object GroupedScan {
     // (BENCHLOG r22) showed auto staying OFF exactly where ON wins
     // 1.2x and halves shuffle read. 1.5 GiB keeps the 50M wash case
     // (~1.0 GB estimate) OFF and engages the measured win band.
-    // Stats-less plans (sizeInBytes at the Long.MaxValue fallback) stay
-    // OFF: an unknown size must not trigger a corpus-sized cache.
-    val persistOn = persistSorted.getOrElse {
-      val thresh = graft.GraftSession.longConf(df.sparkSession,
-        "spark.graft.scan.persistAutoBytes", 3L << 29)
-      val sz = df.queryExecution.optimizedPlan.stats.sizeInBytes
-      sz < BigInt(Long.MaxValue) / 2 && sz >= thresh
-    }
+    // An unknown estimate stays OFF: it must not trigger a corpus-sized
+    // cache.
+    val thresh = Gate.knob(df.sparkSession,
+      "spark.graft.scan.persistAutoBytes", 3L << 29)
+    val persistOn = Gate.estimatedBytes(df).exists(_ >= thresh)
     val rdd = if (persistOn) s.persist(ranged).rdd else ranged.rdd
     val nKernels = kernels.length
 
@@ -310,7 +305,7 @@ object GroupedScan {
         Row.fromSeq(r.toSeq.take(nIn) ++ outs) // strip the tie column
       }
     }
-    df.sparkSession.createDataFrame(outRdd, outSchema)
+    new Df(df.sparkSession.createDataFrame(outRdd, outSchema))
   }
 
   // ------------------------------------------------------------------

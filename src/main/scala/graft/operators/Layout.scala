@@ -71,7 +71,7 @@ object Layout {
     val aggs = cols.flatMap(c => Seq(
       min(col(c).cast("double")).as(s"__mn_$c"),
       max(col(c).cast("double")).as(s"__mx_$c")))
-    val row = df.sdf.agg(aggs.head, aggs.tail: _*).head
+    val row = df.sdf.agg(aggs.head, aggs.tail: _*).head()
     val buckets = cols.zipWithIndex.map { case (c, i) =>
       // all-NULL column: a constant-0 LANE (not NULL-per-row, which
       // would NULL the whole key and erase the other dimensions'
@@ -115,7 +115,7 @@ object Layout {
     val aggs = cols.flatMap(c => Seq(
       min(col(c).cast("double")).as(s"__mn_$c"),
       max(col(c).cast("double")).as(s"__mx_$c")))
-    val row = df.sdf.agg(aggs.head, aggs.tail: _*).head
+    val row = df.sdf.agg(aggs.head, aggs.tail: _*).head()
     val buckets = cols.zipWithIndex.map { case (c, i) =>
       if (row.isNullAt(2 * i)) lit(0L)
       else {

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.api.Df
+import graft.plans.GraftFunctions
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -74,7 +75,6 @@ object Linkage {
     require(w >= 1, s"sortedNeighborhoodJaro: window must be >= 1: $w")
     require(minSim >= 0.0 && minSim <= 1.0,
       s"sortedNeighborhoodJaro: minSim must be in [0,1]: $minSim")
-    graft.plans.GraftFunctions.register(df.spark)
     val win = Window.partitionBy(blockCols.map(col): _*)
       .orderBy(col(sortCol), col(idCol))
     val lagged = (1 to w).foldLeft(df.sdf) { (d, off) =>
@@ -88,7 +88,7 @@ object Linkage {
         col(idCol).as("right_id"),
         col(s"__prev_text_$off").as("left_text"),
         col(textCol).as("right_text"),
-        expr(s"round(graft_jaro_winkler(__prev_text_$off, `$textCol`), 6)")
+        round(GraftFunctions.jaroWinkler(col(s"__prev_text_$off"), col(textCol)), 6)
           .as("sim"),
         lit(off).as("offset"))
     }

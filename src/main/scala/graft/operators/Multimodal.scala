@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.api.Df
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{Dataset, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 

@@ -183,7 +183,7 @@ object Quantiles {
       val stats = vals.agg(
         approx_count_distinct(gKey).as("g"),
         count(lit(1)).as("n"),
-        approx_count_distinct(col("__v")).as("v")).head
+        approx_count_distinct(col("__v")).as("v")).head()
       val est = stats.getLong(0)
       // rsd defaults to 5%; 1.5× headroom makes a false trip on a
       // genuinely ≤ maxGroups domain essentially impossible, and the
@@ -199,7 +199,7 @@ object Quantiles {
         .groupBy((0 until nKeys).map(i => col(s"__g$i")) :+ col("__v"): _*)
         .agg(count(lit(1)).as("__n"))
       else vals
-    val ranged = triples.repartitionByRange(pinnedShufflePartitions(df),
+    val ranged = triples.repartitionByRange(Gate.shufflePartitions(df),
       (0 until nKeys).map(i => col(s"__g$i").asc) :+ col("__v").asc: _*)
     val rdd = ranged.rdd
     // weight of one emitted row: its duplicate count when collapsed,
@@ -320,7 +320,7 @@ object Quantiles {
       .select(col("__kv.__g").as("__g"), col("__kv.__v").as("__v"))
       .where(col("__v").isNotNull)
       .groupBy(col("__g"), col("__v")).agg(count(lit(1)).as("__n"))
-      .repartitionByRange(pinnedShufflePartitions(df),
+      .repartitionByRange(Gate.shufflePartitions(df),
         col("__g").asc, col("__v").asc)
     val rdd = ranged.queryExecution.toRdd // ONE exchange feeds both jobs
     // job 1: per (partition, ordinal) weight sums — P·k longs, never data
@@ -371,53 +371,6 @@ object Quantiles {
       if (totals(code) == 0L) probs.map(_ => null: java.lang.Double)
       else probs.map(p => java.lang.Double.valueOf(
         interp(p * (totals(code) - 1), g => picked((code, g)))))
-    }
-  }
-
-  /** Explicit partition count for every driver-protocol range exchange
-    * (here, GroupedScan, withRowIndexScalable, selectByTokenBudget).
-    * The count must be explicit — AQE's 64 MB-target coalesce would
-    * re-plan the exchange between the two protocol jobs, and the
-    * protocol's pid-addressed offsets require BOTH jobs to see the
-    * identical partitioning. But an unconditional full-parallelism pin
-    * taxes small inputs: at sf0.1 it doubled rank fusion (three
-    * exchanges × two jobs × 32 near-empty tasks), so the count is
-    * sized to Catalyst's estimate of the input —
-    * `min(conf, max(2, ceil(sizeInBytes / 128 KiB)))`. The estimate is
-    * compressed file-size-derived, and the protocol's post-exchange
-    * work (sort + kernel replay over decompressed rows) is CPU-bound,
-    * so the per-task target must be far below AQE's IO-oriented
-    * 64 MB: 128 KiB keeps a ~4 MiB-estimate input (sf0.1 lineitem
-    * projections, measured: a 512 KiB target cost grouped-rolling
-    * +64%) at full parallelism while kilobyte inputs (per-signal
-    * document rankings) stop paying 32 task launches per protocol
-    * job. At cluster scale the estimate
-    * vastly exceeds the conf, so this is exactly the old full-
-    * parallelism pin — the sizing only ever removes task overhead on
-    * tiny inputs. Falls back to the conf when stats are unavailable or
-    * absurd (non-file plans default to huge sizes; `min` caps them).
-    * Write-layout exchanges (zorderBy) deliberately stay unpinned —
-    * there the size targeting IS the point. */
-  private[graft] def pinnedShufflePartitions(df: DataFrame): Int = {
-    val conf = df.sparkSession.conf
-      .getOption("spark.sql.shuffle.partitions").flatMap(_.toIntOption)
-      .getOrElse(df.sparkSession.sparkContext.defaultParallelism)
-    val est =
-      try df.queryExecution.optimizedPlan.stats.sizeInBytes
-      catch { case scala.util.control.NonFatal(_) => BigInt(-1) }
-    if (est <= 0) conf
-    else {
-      // BigInt throughout: RDD-backed frames (chained GroupedScan
-      // outputs) report defaultSizeInBytes = Long.MaxValue, where Long
-      // ceil-division would overflow negative and pin 2 tasks on a
-      // frame whose size is simply UNKNOWN (measured: q247 +60%).
-      // Unknown-huge naturally takes the conf via the min.
-      val target = BigInt(128L * 1024)
-      val needed = (est + target - 1) / target
-      // floor of 2 avoids degenerate 1-task protocols on tiny inputs,
-      // but an EXPLICIT conf below it wins — a user pinning
-      // shuffle.partitions=1 asked for serial execution
-      needed.min(BigInt(conf)).max(BigInt(math.min(2, conf))).toInt
     }
   }
 
@@ -502,7 +455,7 @@ object Quantiles {
       s"exactQuantilesCont: probs in [0,1]: $probs")
     val ranged = df.select(col(c).cast("double").as("__v"))
       .where(col("__v").isNotNull)
-      .repartitionByRange(pinnedShufflePartitions(df), col("__v").asc)
+      .repartitionByRange(Gate.shufflePartitions(df), col("__v").asc)
     val rdd = ranged.queryExecution.toRdd // ONE exchange feeds both jobs
     val counts = rdd.mapPartitionsWithIndex { (p, it) =>
       var n = 0L; while (it.hasNext) { it.next(); n += 1 }

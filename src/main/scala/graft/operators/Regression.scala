@@ -90,7 +90,7 @@ object Regression {
           val (a, b) = (cols(i), cols(j))
           sum(p(a, b)).cast("double").as(s"p_${i}_$j")
         })
-    val row = FanOut(df.sdf).agg(aggs.head, aggs.tail: _*).head // FanOut: see olsFit2
+    val row = FanOut(df.sdf).agg(aggs.head, aggs.tail: _*).head() // FanOut: see olsFit2
     val n = row.getAs[Double]("n")
     val s = cols.map(c => row.getAs[Double](s"s_$c"))
     def raw(i: Int, j: Int) =

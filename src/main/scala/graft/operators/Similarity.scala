@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.api.{Df, FooterSchema}
-import graft.functions.VectorFunctions._
+import graft.plans.GraftFunctions
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -35,7 +35,7 @@ object Similarity {
     val w = Window.partitionBy("query_id")
       .orderBy(col("cosine").desc, col("corpus_id"))
     filtered
-      .withColumn("cosine", round(expr("graft_cosine(q_vec, c_vec)"), 6))
+      .withColumn("cosine", round(GraftFunctions.cosine(col("q_vec"), col("c_vec")), 6))
       .withColumn("rank", row_number().over(w))
       .where(col("rank") <= k)
       .select("query_id", "rank", "corpus_id", "cosine")
@@ -45,7 +45,6 @@ object Similarity {
     * broadcast (small side); ties broken by corpus id for determinism. */
   def bruteForceTopK(queries: Df, corpus: Df, vecCol: String, idCol: String,
                      k: Int, excludeSelf: Boolean = true): Df = {
-    graft.plans.GraftFunctions.register(queries.spark)
     val q = broadcast(queries.sdf.select(
       col(idCol).as("query_id"), col(vecCol).as("q_vec")))
     val c = corpus.sdf.select(col(idCol).as("corpus_id"), col(vecCol).as("c_vec"))
@@ -225,7 +224,6 @@ object Similarity {
   def ivfTopK(queries: Df, corpus: Df, vecCol: String, idCol: String,
               k: Int, nlist: Int = 16, nprobe: Int = 4,
               excludeSelf: Boolean = true, fitSample: Double = 1.0): Df = {
-    graft.plans.GraftFunctions.register(queries.spark)
     val c = corpus.sdf.select(col(idCol).as("corpus_id"), col(vecCol).as("c_vec"))
     // nlist centroids (driver-side, tiny) become expression literals —
     // the plan carries them to every executor, no broadcast variable.
@@ -322,7 +320,6 @@ object Similarity {
     require(k >= 1, s"searchIvfIndex: k must be >= 1: $k")
     require(nprobe >= 1, s"searchIvfIndex: nprobe must be >= 1: $nprobe")
     val spark = queries.spark
-    graft.plans.GraftFunctions.register(spark)
     val centers = FooterSchema.read(spark, s"$path/centroids")
       .collect().map(r => (r.getInt(0), r.getInt(1), r.getDouble(2)))
       .groupBy(_._1).toSeq.sortBy(_._1)
@@ -390,7 +387,6 @@ object Similarity {
   def lshTopK(queries: Df, corpus: Df, vecCol: String, idCol: String,
               k: Int, planes: Int = 8, dim: Int = 64,
               excludeSelf: Boolean = true): Df = {
-    graft.plans.GraftFunctions.register(queries.spark)
     val sig = lshSignature(col(vecCol), planes, dim)
     val q = broadcast(queries.sdf.select(
       col(idCol).as("query_id"), col(vecCol).as("q_vec"), sig.as("bucket")))
@@ -792,7 +788,7 @@ object Similarity {
     val meanAggs = (0 until d).map(i =>
       sum(col(s"__x$i").cast("decimal(18,8)")).cast("double").as(s"__sm_$i"))
     val aggsAll = prodAggs ++ meanAggs :+ count(lit(1)).as("__n")
-    val row = fin.agg(aggsAll.head, aggsAll.tail: _*).head
+    val row = fin.agg(aggsAll.head, aggsAll.tail: _*).head()
     require(!row.isNullAt(0),
       "mahalanobisScores: no fully-finite rows to fit on")
     val nSp = d * (d + 1) / 2
@@ -1015,9 +1011,8 @@ object Similarity {
   private def momentsRow(vecs: Df, vecCol: String,
                          keys: Seq[String] = Nil)
       : org.apache.spark.sql.DataFrame = {
-    graft.plans.GraftFunctions.register(vecs.spark)
-    val aggs = Seq(expr("graft_vector_sum(__p, 28, 12)").as("__sp"),
-      expr("graft_vector_sum(__v, 18, 8)").as("__sm"),
+    val aggs = Seq(GraftFunctions.vectorSum(col("__p"), 28, 12).as("__sp"),
+      GraftFunctions.vectorSum(col("__v"), 18, 8).as("__sm"),
       count(lit(1)).as("__n"))
     // the d²-per-row product build + decimal partial aggregation is the
     // whole cost — parallelize it even when the scan is one row group

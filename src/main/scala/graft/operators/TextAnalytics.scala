@@ -349,12 +349,8 @@ object TextAnalytics {
     * The merge table itself is driver-sized by definition
     * (vocab_size − |alphabet| rows).
     *
-    * `driverMaxVocab` follows the repo-wide scale-gate convention
-    * (USAGE.md "Scale gates", shared with
-    * [[graft.operators.Dedup.connectedComponents]]'s and
-    * [[graft.operators.Graphs.pageRank]]'s `broadcastMaxNodes`):
-    * measured state size, identical results either side, 0 disables
-    * the fast path unconditionally. */
+    * `driverMaxVocab` is a measured scale gate on the vocabulary
+    * ([[Gate]]). */
   def bpeMerges(docs: Df, textCol: String, nMerges: Int,
                 driverMaxVocab: Long = 1000000): Df = Materialize.scope { s =>
     require(nMerges >= 1 && nMerges <= 1000,
@@ -372,9 +368,7 @@ object TextAnalytics {
         concat_ws("||", split(col("word"), "(?!^)(?!$)")), lit("|")).as("seq"),
         col("wf")))
     val merges = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.Row]
-    // gate short-circuits on 0 (the q271 forced-shuffle contract — no
-    // driver count() just to compare against 0)
-    if (driverMaxVocab > 0 && vocab0.count() <= driverMaxVocab) {
+    if (Gate.measured(driverMaxVocab)(vocab0.count())) {
       // driver-mode rounds over the collected (symbols, wf) vocabulary;
       // the collected vocab's block is released at once
       var words: Array[(Array[String], Long)] =

@@ -1,17 +1,21 @@
 package graft.plans
 
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.FunctionRegistry.FunctionBuilder
-import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Cast, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Cast, Expression, ExpressionInfo, Literal}
 import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
+import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types.LongType
 
-/** Registration for graft's native Catalyst expressions.
+/** graft's native Catalyst expressions.
   *
-  * Two paths:
+  * Three paths to them:
+  *  - the typed column functions ([[GraftFunctions.cosine]], …): what the
+  *    operators use. They build the expression directly, so a plan
+  *    never depends on what a session's function registry holds;
   *  - [[GraftFunctions.register]]: idempotent per-session registration
-  *    (used internally by the operators — callers need no setup);
+  *    of the SQL names, for `expr`/`selectExpr` callers;
   *  - [[GraftExtensions]]: `SparkSessionExtensions` hook for
   *    `spark.sql.extensions=graft.plans.GraftExtensions`, making every
   *    function of [[GraftFunctions.table]] available in every session
@@ -51,19 +55,46 @@ object GraftFunctions {
     fn("graft_jaccard_sorted", classOf[SortedJaccard])(
       binary(_, "(array<bigint>, array<bigint>)", SortedJaccard)),
     fn("graft_pct_normalize", classOf[PercentNormalize])(
-      unary(_, "(string)", PercentNormalize)),
+      unary(_, "(string)", PercentNormalize.apply)),
     fn("graft_jaro_winkler", classOf[JaroWinkler])(
-      binary(_, "(string, string)", JaroWinkler)),
+      binary(_, "(string, string)", JaroWinkler.apply)),
     fn("graft_bloom_agg", classOf[BloomFilterAggregate])(
       binary(_, "(bigint hash, bigint estimated_items)",
         (child, est) => new BloomFilterAggregate(child, Cast(est, LongType)))),
     fn("graft_might_contain", classOf[BloomFilterMightContain])(
       binary(_, "(binary sketch, bigint hash)", BloomFilterMightContain(_, _))),
-    fn("graft_vector_sum", classOf[VectorDecimalSum])(vectorSum))
+    fn("graft_vector_sum", classOf[VectorDecimalSum])(vectorSumFn))
 
   val names: Seq[String] = table.map(_.name)
 
-  private[plans] def vectorSum(name: String): FunctionBuilder = { exprs =>
+  private def column(e: Expression): Column = ColumnBridge.column(e)
+  private def ex(c: Column): Expression = ColumnBridge.expression(c)
+
+  /** `graft_cosine`, [[FloatCosine]] */
+  def cosine(a: Column, b: Column): Column = column(FloatCosine(ex(a), ex(b)))
+  /** `graft_jaccard_sorted`, [[SortedJaccard]] */
+  def jaccardSorted(a: Column, b: Column): Column =
+    column(SortedJaccard(ex(a), ex(b)))
+  /** `graft_jaro_winkler`, [[JaroWinkler]] */
+  def jaroWinkler(a: Column, b: Column): Column = column(JaroWinkler(ex(a), ex(b)))
+  /** `graft_vector_sum` aggregate, [[VectorDecimalSum]] */
+  def vectorSum(v: Column, precision: Int, scale: Int): Column =
+    column(VectorDecimalSum(ex(v), Literal(precision), Literal(scale))
+      .toAggregateExpression())
+  /** `graft_bloom_agg` aggregate: a one-pass fixed-size sketch over a
+    * LongType hash column, Spark's own runtime-filter
+    * `BloomFilterAggregate` (it has no public DSL wrapper) */
+  def bloomAgg(hashed: Column, expectedItems: Long): Column =
+    column(new BloomFilterAggregate(ex(hashed), Cast(Literal(expectedItems), LongType))
+      .toAggregateExpression())
+  /** `graft_might_contain`: Spark's `BloomFilterMightContain` against a
+    * serialized sketch embedded as a literal (the expression type-checks
+    * only foldable or subquery sketch sides; a literal ships with the
+    * task binary like any broadcast scalar) */
+  def mightContain(bloom: Array[Byte], hashed: Column): Column =
+    column(BloomFilterMightContain(Literal(bloom), ex(hashed)))
+
+  private[plans] def vectorSumFn(name: String): FunctionBuilder = { exprs =>
     require(exprs.length == 3,
       s"$name expects exactly 3 arguments " +
         s"(array<double>, int precision, int scale), got ${exprs.length}")
@@ -91,8 +122,8 @@ object GraftFunctions {
   /** Registers each function of [[table]] the session does not already
     * carry: a name whose registered `ExpressionInfo` names the same
     * class (an earlier call, or [[GraftExtensions]]) is left as it is, so
-    * the operators that call this on every build neither redo the work
-    * nor log Spark's "replaced a previously registered function". */
+    * a repeated call neither redoes the work nor logs Spark's "replaced
+    * a previously registered function". */
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
     table.foreach { f =>

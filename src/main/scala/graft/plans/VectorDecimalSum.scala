@@ -1,7 +1,7 @@
 package graft.plans
 
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
-import java.math.{BigDecimal => JBigDecimal, MathContext, RoundingMode}
+import java.math.{BigDecimal => JBigDecimal, RoundingMode}
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult

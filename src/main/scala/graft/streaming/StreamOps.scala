@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /** Structured Streaming surface — post-parity extension (SURVEY.md §7.6:
   * the reference has zero streaming). The `events` table doubles as the
@@ -485,14 +484,6 @@ object StreamOps {
         col("max_user_hour"), col("n_user_hours"))
   }
 
-  /** run a streaming plan to completion against the bounded test input
-    * and return the materialized result (memory sink).
-    *
-    * `complete` mode: with bounded input, `append` would hold back every
-    * window the watermark has not passed yet — the tail of the data
-    * would never emit. Production unbounded pipelines use `append` (only
-    * finalized windows, bounded state); for batch-equivalence testing
-    * `complete` emits all windows. */
   /** Drain a bounded stream into a PARQUET file sink (the production
     * landing-zone shape: append-mode files + a checkpoint directory
     * for exactly-once restart semantics) and read the result back.
@@ -518,6 +509,14 @@ object StreamOps {
     streamed.sparkSession.read.schema(streamed.schema).parquet(outDir)
   }
 
+  /** run a streaming plan to completion against the bounded test input
+    * and return the materialized result (memory sink).
+    *
+    * `complete` mode: with bounded input, `append` would hold back every
+    * window the watermark has not passed yet — the tail of the data
+    * would never emit. Production unbounded pipelines use `append` (only
+    * finalized windows, bounded state); for batch-equivalence testing
+    * `complete` emits all windows. */
   def runToCompletion(streamed: DataFrame, name: String,
                       mode: String = "complete"): DataFrame = {
     val spark = streamed.sparkSession
@@ -548,10 +547,6 @@ object StreamOps {
   }
 }
 
-/** k-best (value desc, id asc) tuples per key in RocksDB ListState —
-  * the [[StreamOps.streamingTopKPerKey]] processor. Kept top-level:
-  * the processor is serialized to executors, and an inner class would
-  * drag the enclosing object graph along. */
 /** Open-session record + gap timer per key — the
   * [[StreamOps.streamingSessionizeWithTimers]] processor. Value sums
   * accumulate as exact scale-4 BigDecimal (each double rounds to 4dp
@@ -679,6 +674,10 @@ private[streaming] class KllQuantileProcessor(k: Int, horizonMicros: Long)
     }
 }
 
+/** k-best (value desc, id asc) tuples per key in RocksDB ListState —
+  * the [[StreamOps.streamingTopKPerKey]] processor. Kept top-level:
+  * the processor is serialized to executors, and an inner class would
+  * drag the enclosing object graph along. */
 private[streaming] class TopKProcessor(k: Int)
   extends org.apache.spark.sql.streaming.StatefulProcessor[
     Long, (Long, Long, Double), (Long, Long, Double, Int)] {

@@ -100,6 +100,34 @@ class MaterializeSpec extends AnyFunSuite {
     assert(cacheIsEmpty())
   }
 
+  test("a scan's gated sorted frame is attached to its result") {
+    val rows = (0 until 200).map(i => Row(i.toLong, i % 7, (i % 11).toDouble))
+    // LocalRelation-backed, so the scan persist gate has a size estimate
+    val df = new Df(spark.createDataFrame(java.util.Arrays.asList(rows: _*),
+      StructType(Seq(StructField("id", LongType), StructField("g", IntegerType),
+        StructField("v", DoubleType)))))
+    val key = "spark.graft.scan.persistAutoBytes"
+    Df.releaseRetained()
+    spark.catalog.clearCache()
+    assert(cacheIsEmpty(), "dirty slate")
+    spark.conf.set(key, "1")
+    try {
+      val out = df.groupby("g").scanScalable(Seq("id"),
+        Seq(graft.operators.GroupedScan.CumSum("v", "cs")))
+      assert(out.sdf.count() == 200)
+      assert(!cacheIsEmpty(), "the gate must persist the sorted frame")
+      out.unpersistIntermediates()
+      val left = spark.sparkContext.getPersistentRDDs.size
+      val cacheEmpty = spark.sharedState.cacheManager.isEmpty
+      assert(left == 0 && cacheEmpty, s"after unpersistIntermediates: " +
+        s"$left persistent RDDs, cacheManager empty: $cacheEmpty")
+    } finally {
+      spark.conf.unset(key)
+      Df.releaseRetained()
+      spark.catalog.clearCache()
+    }
+  }
+
   test("source census: only Materialize persists, checkpoints and attaches") {
     // `s` is the scope handle every operator body names: its calls are
     // the one owner's; any other receiver of these calls is not

@@ -311,4 +311,14 @@ class NativeExprSpec extends AnyFunSuite {
     assert(s2.sql("SELECT graft_vector_sum(array(CAST(id AS DOUBLE)), 18, 8) FROM range(3)")
       .collect().length == 1)
   }
+
+  test("operators build native expressions without the session's function registry") {
+    val fresh = spark.newSession()
+    val e = Df.readParquet(fresh, s"$sf/embeddings.parquet")
+    val top = graft.operators.Similarity.bruteForceTopK(e, e, "embedding", "vec_id", 2)
+    assert(top.sdf.count() > 0)
+    assert(!fresh.sessionState.functionRegistry
+      .functionExists(org.apache.spark.sql.catalyst.FunctionIdentifier("graft_cosine")),
+      "bruteForceTopK registered graft_cosine on the session")
+  }
 }

@@ -1007,82 +1007,75 @@ class ScanSpec extends AnyFunSuite {
     Df.releaseRetained()
   }
 
-  test("per-call persistSorted overrides the adaptive default, both values in " +
-       "one JVM, identical results, blocks drain via releaseRetained") {
-    val rows = (0 until 200).map { i =>
+  /** a LocalRelation-backed frame of `rows`: the scan persist gate reads
+    * the optimizer's size estimate, and an RDD-backed frame
+    * (`Df.fromRows`) has none, which the gate treats as OFF */
+  private def localDf(rows: Seq[Row]): Df =
+    new Df(spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema))
+
+  test("scan persist gate forced both ways by persistAutoBytes, keyed and keyless") {
+    val df = localDf((0 until 200).map { i =>
       Row(i.toLong, 0, i % 7, if (i % 9 == 0) null else (i % 11).toDouble,
         null, null)
-    }.toList
-    val df = mkDf(rows)
+    })
     val sc = spark.sparkContext
+    val key = "spark.graft.scan.persistAutoBytes"
     Df.releaseRetained(); spark.catalog.clearCache()
     val before = sc.getPersistentRDDs.size
-    // Some(false): the two-pass re-fetch — no new persisted blocks
-    val off = df.scanKeyless(Seq("id"), persistSorted = Some(false))(_
+    def keyless = df.scanKeyless(Seq("id"))(_
       .cumsum("v", "cs").rolling("v", 4, "min", "rm"))
-    val offRows = byId(off, "cs")
-    assert(sc.getPersistentRDDs.size == before,
-      "persistSorted=Some(false) must not persist")
-    // Some(true): the sorted partitions are cached (pass 1 materializes
-    // them eagerly, so the block is observable right after the call)
-    val on = df.scanKeyless(Seq("id"), persistSorted = Some(true))(_
-      .cumsum("v", "cs").rolling("v", 4, "min", "rm"))
-    val onCs = byId(on, "cs")
-    assert(sc.getPersistentRDDs.size > before,
-      "persistSorted=Some(true) must persist the sorted pass")
-    assert(onCs == offRows)
-    assert(byId(on, "rm") == byId(off, "rm"))
-    // keyed entry point takes the same option
-    val keyed = df.groupby("g").scanScalable(Seq("id"),
-      Seq(graft.operators.GroupedScan.CumSum("v", "cs")),
-      persistSorted = Some(true))
-    val keyedOff = df.groupby("g").scanScalable(Seq("id"),
-      Seq(graft.operators.GroupedScan.CumSum("v", "cs")),
-      persistSorted = Some(false))
-    assert(byId(keyed, "cs") == byId(keyedOff, "cs"))
-    Df.releaseRetained()
-    assert(sc.getPersistentRDDs.size == before,
-      "releaseRetained must drain the per-call persists")
+    def keyed = df.groupby("g").scanScalable(Seq("id"),
+      Seq(graft.operators.GroupedScan.CumSum("v", "cs")))
+    try {
+      // above any real frame: the two-pass re-fetch, nothing persisted
+      spark.conf.set(key, Long.MaxValue.toString)
+      val off = keyless
+      val offCs = byId(off, "cs")
+      val keyedOff = byId(keyed, "cs")
+      assert(sc.getPersistentRDDs.size == before,
+        "the gate OFF must not persist")
+      // below any real frame: the sorted partitions are cached (pass 1
+      // materializes them, so the block is observable right after)
+      spark.conf.set(key, "1")
+      val on = keyless
+      assert(sc.getPersistentRDDs.size > before,
+        "the gate ON must persist the sorted pass")
+      assert(byId(on, "cs") == offCs)
+      assert(byId(on, "rm") == byId(off, "rm"))
+      assert(byId(keyed, "cs") == keyedOff)
+      Df.releaseRetained()
+      assert(sc.getPersistentRDDs.size == before,
+        "releaseRetained must drain the gated persists")
+    } finally {
+      spark.conf.unset(key)
+      Df.releaseRetained()
+    }
   }
 
-  test("adaptive persistSorted default: flips ON past the size threshold, " +
-       "stays OFF below it, explicit Some(false) still wins (r21)") {
-    val rows = (0 until 200).map { i =>
+  test("adaptive scan persist gate: flips ON past the size threshold, stays OFF below it") {
+    val df = localDf((0 until 200).map { i =>
       Row(i.toLong, 0, i % 7, (i % 11).toDouble, null, null)
-    }.toList
-    // LocalRelation-backed frame: the auto gate reads the optimizer's
-    // size estimate, and an RDD-backed frame (Df.fromRows) reports the
-    // stats-less Long.MaxValue fallback, which the gate deliberately
-    // treats as OFF (an unknown size must not trigger a cache)
-    val df = new Df(spark.createDataFrame(
-      new java.util.ArrayList[Row](scala.jdk.CollectionConverters
-        .SeqHasAsJava(rows).asJava), schema))
+    })
     val sc = spark.sparkContext
     val key = "spark.graft.scan.persistAutoBytes"
     Df.releaseRetained(); spark.catalog.clearCache()
     val before = sc.getPersistentRDDs.size
     try {
-      // threshold below any real frame: None must take the persist path
+      // threshold below any real frame: the gate takes the persist path
       spark.conf.set(key, "1")
       val on = df.scanKeyless(Seq("id"))(_.cumsum("v", "cs"))
       val onRows = byId(on, "cs")
       assert(sc.getPersistentRDDs.size > before,
-        "auto default must persist when the size estimate >= threshold")
-      // explicit Some(false) beats the auto-ON decision
+        "the gate must persist when the size estimate >= threshold")
       Df.releaseRetained()
-      val forcedOff = df.scanKeyless(Seq("id"),
-        persistSorted = Some(false))(_.cumsum("v", "cs"))
-      val forcedRows = byId(forcedOff, "cs")
-      assert(sc.getPersistentRDDs.size == before,
-        "explicit Some(false) must override the auto-ON default")
-      // threshold above any real frame: None must take the re-fetch path
+      // threshold above any real frame: the gate takes the re-fetch path
       spark.conf.set(key, Long.MaxValue.toString)
       val off = df.scanKeyless(Seq("id"))(_.cumsum("v", "cs"))
       val offRows = byId(off, "cs")
       assert(sc.getPersistentRDDs.size == before,
-        "auto default must not persist below the threshold")
-      assert(onRows == offRows && forcedRows == offRows,
-        "results must be identical on every side of the gate")
+        "the gate must not persist below the threshold")
+      assert(onRows == offRows,
+        "results must be identical on both sides of the gate")
     } finally {
       spark.conf.unset(key)
       Df.releaseRetained()
@@ -1105,13 +1098,13 @@ class ScanSpec extends AnyFunSuite {
 
   test("protocol pin sizes by Catalyst estimate: small input coalesces, " +
        "unknown-size (RDD-backed) keeps the conf") {
-    import graft.operators.Quantiles
+    import graft.operators.Gate
     val conf = spark.conf.get("spark.sql.shuffle.partitions").toInt
     // a 100-row local frame estimates kilobytes → the pin drops to the
     // floor instead of launching `conf` near-empty protocol tasks
     // (the r15 q192 regression)
     val tiny = spark.range(100).selectExpr("id", "cast(id as double) as v")
-    val tinyPin = Quantiles.pinnedShufflePartitions(tiny)
+    val tinyPin = Gate.shufflePartitions(tiny)
     assert(tinyPin >= 2 && tinyPin < conf, s"tiny pin $tinyPin vs conf $conf")
     // an RDD-backed frame reports defaultSizeInBytes = Long.MaxValue;
     // the BigInt ceil-division must NOT overflow negative (which pinned
@@ -1121,7 +1114,7 @@ class ScanSpec extends AnyFunSuite {
       tiny.rdd.map(r => Row(r.getLong(0), r.getDouble(1))),
       StructType(Seq(StructField("id", LongType, nullable = false),
         StructField("v", DoubleType, nullable = false))))
-    assert(Quantiles.pinnedShufflePartitions(rddBacked) == conf)
+    assert(Gate.shufflePartitions(rddBacked) == conf)
     // sizing never changes RESULTS, only the partition count: a chained
     // keyless scan (RDD-backed second input) still matches the window
     val out = mkDf(List(Row(0L, 0, 1, 2.0, null, null),

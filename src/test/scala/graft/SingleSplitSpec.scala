@@ -125,7 +125,7 @@ class SingleSplitSpec extends AnyFunSuite {
     sameBothSides("GroupedScan")(s => GroupedScan.scan(
       li(s).sdf.select("l_orderkey", "l_linenumber", "l_quantity"),
       Seq("l_orderkey"), Seq("l_linenumber" -> true),
-      Seq(GroupedScan.CumSum("l_quantity", "cs"))))
+      Seq(GroupedScan.CumSum("l_quantity", "cs"))).sdf)
     val q = Seq(spark, multiSplit).map(s =>
       Quantiles.exactQuantilesCont(li(s).sdf, "l_extendedprice", Seq(0.1, 0.5, 0.9)))
     assert(q(0) == q(1))
